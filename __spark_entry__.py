@@ -35,144 +35,37 @@ def entry(spark: SparkSession) -> DataFrame:
     return run_kernel(pages)
 
 
+# The driver verifies queries in dict-insertion order and stops after 50.
+# These queries have never reached a driver record, so they lead the order.
+NEVER_DRIVER_VERIFIED = (
+    "bitext_mine",
+    "chunk_overlap",
+    "crawl_budget",
+    "cross_source_dup",
+    "dup_cluster_sizes",
+    "host_components",
+    "host_link_stats",
+    "length_quantiles",
+    "near_dup_precision",
+    "ngram_novelty",
+    "pack_efficiency",
+    "quality_by_rank",
+    "sample_reservoir",
+    "text_char_entropy",
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ extensions)."""
+    """`extract_pipeline`, then the never-driver-verified ops, then every
+    other registered op in sorted order."""
     from pdf_extractor_spark.operators.registry import all_ops
 
-    # The driver verifies queries in dict-insertion order with a 50-query
-    # cap (round-1/round-4 evidence: exactly the first 50 inserted names
-    # appear in CORRECTNESS_r01/r04.json). Round-5 window budget, final
-    # round: every NEVER-driver-verified query (the 39 round-5 additions)
-    # MUST land inside the 50, leaving 10 rotation slots for the
-    # longest-unverified prior queries (round-4 verdict #3). The four
-    # shed rotation candidates (text_token_count, text_quality,
-    # text_lang_id, text_fingerprint) are the homogeneous row-local text
-    # family — each r3-driver-green and re-verified in this session's
-    # local sf0.01 sweep; everything else the cap sheds is driver-green
-    # in CORRECTNESS_r04.json AND in the local sweep.
-    priority = [
-        "x10_json_parse",          # last driver record r2
-        "x12_ts_format",           # last driver record r2
-        "j6_full_outer_compare",   # last driver record r3
-        "j7_broadcast_dim",        # last driver record r3
-        "w1_reading_order",        # last driver record r3
-        "w4_topk_per_group",       # last driver record r3
-        "t5_tumbling_window",      # last driver record r3
-        "t6_session_window",       # last driver record r3
-        "s2_suffix_scan",          # last driver record r3
-        "training_corpus_pipeline",  # last driver record r3
-        "dedup_substring_strip",   # NEW round 5 (Lee et al. span removal)
-        "text_quality_classifier",  # NEW round 5 (hashed-ngram linear scorer)
-        "dedup_incremental",       # NEW round 5 (snapshot band-state dedup)
-        "emb_near_dup_multiband",  # CHANGED round 5 (48 md5 bands) — re-verify
-        "semdedup",                # NEW round 5 (Abbas et al. semantic dedup)
-        "token_budget_select",     # NEW round 5 (distributed prefix sum)
-        "sample_temperature",      # NEW round 5 (alpha=0.5 domain resampling)
-        "mm_mp4_demux",            # NEW round 5 (ISO-BMFF sample-table demux)
-        "classifier_calibration",  # NEW round 5 (held-out threshold sweep)
-        "decontam_fuzzy",          # NEW round 5 (MinHash-band decontamination)
-        "text_collapse_repeats",   # NEW round 5 (indexed-HOF stutter collapse)
-        "dsir_select",             # NEW round 5 (DSIR importance resampling)
-        "ccnet_buckets",           # NEW round 5 (CCNet perplexity terciles)
-        "pack_sequences",          # NEW round 5 (concat-and-chunk packing)
-        "pack_windows",            # NEW round 5 (packed-sequence materialization)
-        "dedup_keep_best",         # NEW round 5 (quality-aware cluster keeper)
-        "url_quality_filter",      # NEW round 5 (RefinedWeb URL rules)
-        "shuffle_shard",           # NEW round 5 (deterministic training shuffle)
-        "url_seen_bloom",          # NEW round 5 (bloom seen-set probe)
-        "quality_signals_wide",    # NEW round 5 (one-pass signal table)
-        "domain_mix_report",       # NEW round 5 (ROLLUP mixture report)
-        "text_bigram_nll",         # NEW round 5 (interpolated bigram LM)
-        "ann_pq_adc",              # NEW round 5 (PQ + ADC shortlist + re-rank)
-        "boilerplate_strip",       # NEW round 5 (jusText-lite block strip)
-        "corpus_diversity",        # NEW round 5 (distinct-n diversity report)
-        "decontam_overlap_len",    # NEW round 5 (contamination run lengths)
-        "langid_confusion",        # NEW round 5 (lang-ID confusion matrix)
-        "dedup_winnow",            # NEW round 5 (winnowing fingerprints, MOSS)
-        "vocab_oov_report",        # NEW round 5 (in-job vocab OOV/fertility)
-        "vocab_growth",            # NEW round 5 (Heaps-law growth checkpoints)
-        "bpe_merges",              # NEW round 5 (in-job BPE merge training)
-        "domain_reweight",         # NEW round 5 (DoReMi-lite mixture weights)
-        "hard_negative_mining",    # NEW round 5 (contrastive triples)
-        "split_leakage",           # NEW round 5 (host-disjoint split audit)
-        "mixture_plan",            # NEW round 5 (epoch-capped sampling plan)
-        "band_skew_stats",         # NEW round 5 (LSH hot-bucket telemetry)
-        "bm25_topk",               # NEW round 5 (BM25 retrieval, in-job queries)
-        "tfidf_keywords",          # NEW round 5 (per-source tf-idf fingerprint)
-        "host_pagerank",           # NEW round 5 (fixed-point host centrality)
-        "crawl_budget",            # NEW round 5 (politeness-capped fetch slots;
-                                   # position 50 — outside the driver cap, so
-                                   # its parity record is the local sweep)
-        "length_quantiles",        # NEW round 5 (exact rank-arithmetic token-
-                                   # length quantiles; outside the cap, local
-                                   # sweep parity record)
-        "pack_efficiency",         # NEW round 5 (truncation/padding telemetry
-                                   # per context length; outside the cap)
-        "host_link_stats",         # NEW round 5 (degree/reciprocity telemetry;
-                                   # outside the cap, local sweep record)
-        "bitext_mine",             # NEW round 5 (margin-based cross-lingual
-                                   # pair mining; outside the cap)
-        "chunk_overlap",           # NEW round 5 (RAG overlapping chunker;
-                                   # outside the cap)
-        "cross_source_dup",        # NEW round 5 (syndication matrix; outside
-                                   # the cap)
-        "text_char_entropy",       # NEW round 5 (templated-content signal;
-                                   # outside the cap)
-        "ngram_novelty",           # NEW round 5 (crawl-freshness curve;
-                                   # outside the cap)
-        "dup_cluster_sizes",       # NEW round 5 (dedup savings histogram;
-                                   # outside the cap)
-        "quality_by_rank",         # NEW round 5 (rank-quality validation;
-                                   # outside the cap)
-        "near_dup_precision",      # NEW round 5 (exact-Jaccard LSH audit;
-                                   # outside the cap)
-        "sample_reservoir",        # NEW round 5 (exact-k uniform sample;
-                                   # outside the cap)
-        "cohort_retention",        # NEW round 5 (first-seen cohort matrix;
-                                   # outside the cap)
-        "funnel_conversion",       # NEW round 5 (strict-order funnel;
-                                   # outside the cap)
-        "host_components",         # NEW round 5 (frontier islands; outside
-                                   # the cap)
-        "event_value_quantiles",   # NEW round 5 (grouped exact p50/p95;
-                                   # outside the cap)
-        "s4_excel_dim",            # round-4 cohort, still in-window
-        "c4_filter_suite",
-        "url_canonical",
-        "text_unigram_nll",
-        "host_stats_salted",
-        "dedup_substring",
-        "sample_stratified",
-        "decontam_ngrams",
-        "pii_redact",
-        "text_gopher_suite",
-        "dedup_lines",
-        "ann_ivf_trained",
-        "dead_letter_triage",
-        "x1_scalar_suite",
-        "x4_marker_roundtrip",
-        "x14_url_pattern",
-        "training_examples",
-        "emb_near_dup_bucketed",
-        "ann_ivf_multiprobe",
-        "s7_span_annotations",
-        "f1_filter_suite",
-        "u1_set_suite",
-        "o4_limit_suite",
-        "w2_first_match_suite",
-        "o3_sorted_distinct",
-        "mm_pipeline",
-        "dedup_components",
-    ]
     ops = all_ops()
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "extract_pipeline": _extract_pipeline_query
     }
-    for name in priority:
-        out[name] = ops[name].build
-    for name, op in sorted(ops.items()):
-        if name not in out:
-            out[name] = op.build
+    for name in (*NEVER_DRIVER_VERIFIED, *sorted(ops)):
+        out.setdefault(name, ops[name].build)
     return out
 
 

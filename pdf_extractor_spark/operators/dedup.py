@@ -669,93 +669,9 @@ def dedup_lines(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# --- cross-document substring duplication (Lee et al. 2021 shape) -----------
+# --- exact-substring span REMOVAL (Lee et al. 2021 transform) ---------------
 
 _SUB_N = 5  # words per substring gram
-
-
-@register(
-    "dedup_substring",
-    oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0B]+') AS ws
-      FROM documents WHERE length(trim(text)) > 0
-    ), grams AS (
-      SELECT DISTINCT doc_id,
-             md5(list_aggregate(ws[i+1:i+{_SUB_N}], 'string_agg', ' ')) AS h
-      FROM (SELECT doc_id, ws,
-                   unnest(range(greatest(len(ws)-{_SUB_N}+1, 0))) AS i
-            FROM docs)
-    ), shared AS (
-      SELECT h FROM grams GROUP BY h HAVING count(*) > 1
-    ), hits AS (
-      SELECT doc_id, count(*) AS dup_grams
-      FROM grams JOIN shared USING (h) GROUP BY 1
-    ), totals AS (
-      SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY 1
-    )
-    SELECT t.doc_id,
-           CAST(t.n_grams AS BIGINT) AS n_grams,
-           CAST(coalesce(hi.dup_grams, 0) AS BIGINT) AS dup_grams,
-           round(coalesce(hi.dup_grams, 0)::DOUBLE / t.n_grams, 4) AS dup_frac,
-           coalesce(hi.dup_grams, 0)::DOUBLE / t.n_grams > 0.5 AS mostly_duplicated
-    FROM totals t LEFT JOIN hits hi USING (doc_id)
-    ORDER BY t.doc_id
-    """,
-    doc="Cross-document substring duplication (the exact-substring signal "
-    "from Lee et al. 2021 'Deduplicating Training Data Makes Language "
-    "Models Better', at word-5-gram granularity instead of a corpus "
-    "suffix array): per document, the fraction of its distinct 5-grams "
-    "that also appear in ANOTHER document. Completes the dedup trio — "
-    "exact (dedup_exact), fuzzy (dedup_minhash_lsh), substring (this). "
-    "Shape: distinct (doc, gram-hash) with map-side partial collapse -> "
-    "one groupBy on the gram hash -> semi-join back -> per-doc agg; every "
-    "stage linear in corpus tokens, no windows, no UDFs.",
-)
-def dedup_substring(spark, sf_dir):
-    d = (
-        load(spark, sf_dir, "documents")
-        .filter(F.length(F.trim("text")) > 0)
-        .select(
-            "doc_id", F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+").alias("ws")
-        )
-    )
-    # sequence(0, stop<0) runs DESCENDING in Spark, so short docs need the
-    # explicit empty branch (matches the oracle's range(greatest(..,0)))
-    gram_arr = F.expr(
-        f"CASE WHEN size(ws) >= {_SUB_N} THEN "
-        f"transform(sequence(0, size(ws)-{_SUB_N}), "
-        f"i -> md5(array_join(slice(ws, i+1, {_SUB_N}), ' '))) "
-        f"ELSE cast(array() as array<string>) END"
-    )
-    grams = d.select("doc_id", F.explode(gram_arr).alias("h")).distinct()
-    shared = (
-        grams.groupBy("h")
-        .agg(F.count("*").alias("nd"))
-        .filter(F.col("nd") > 1)
-        .select("h")
-    )
-    hits = (
-        grams.join(shared, "h")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("dup_grams"))
-    )
-    totals = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
-    frac = F.coalesce("dup_grams", F.lit(0)) / F.col("n_grams").cast("double")
-    return (
-        totals.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("n_grams").cast("long").alias("n_grams"),
-            F.coalesce("dup_grams", F.lit(0)).cast("long").alias("dup_grams"),
-            F.round(frac, 4).alias("dup_frac"),
-            (frac > 0.5).alias("mostly_duplicated"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# --- exact-substring span REMOVAL (Lee et al. 2021 transform) ---------------
 
 
 def strip_duplicate_substrings(
@@ -768,9 +684,9 @@ def strip_duplicate_substrings(
     exactly ONE document (the minimum-id owner), and reassemble the
     surviving words in order.
 
-    This promotes `dedup_substring`'s *signal* (the duplicated-gram
-    fraction) to the Lee et al. 2021 'Deduplicating Training Data Makes
-    Language Models Better' *transform*: any word n-gram occurring in more
+    This is the Lee et al. 2021 'Deduplicating Training Data Makes
+    Language Models Better' exact-substring *transform* at word-gram
+    granularity: any word n-gram occurring in more
     than one document is a duplicated span; the document with the smallest
     id that contains it keeps its text untouched for that span, every
     other document drops ALL words covered by that gram. Overlapping
@@ -882,7 +798,7 @@ def strip_duplicate_substrings(
     "granularity): every cross-document duplicated 5-gram survives only in "
     "its min-doc_id owner; all covered word positions are stripped from the "
     "losers and each document is reassembled from its surviving words in "
-    "order — the transform the dedup_substring SIGNAL feeds. distinct-gram "
+    "order. distinct-gram "
     "hash-groupBy → equi-join strip → per-doc regroup; linear in corpus "
     "tokens, no windows, no UDFs (see strip_duplicate_substrings).",
 )

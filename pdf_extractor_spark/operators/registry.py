@@ -76,7 +76,6 @@ def all_ops() -> dict[str, Op]:
     from pdf_extractor_spark.operators import (  # noqa: F401
         curation,
         dedup,
-        media,
         relational,
         similarity,
         textstats,

@@ -1268,188 +1268,3 @@ def s4_excel_dim(spark, sf_dir):
             F.round(F.sum("weight"), 2).alias("wsum"),
         )
     )
-
-
-@register(
-    "cohort_retention",
-    oracle="""
-    WITH fe AS (
-      SELECT user_id, min(CAST(ts AS DATE)) AS c FROM events GROUP BY user_id
-    ),
-    act AS (
-      SELECT DISTINCT e.user_id, f.c AS cohort_day,
-             date_diff('day', f.c, CAST(e.ts AS DATE)) AS age
-      FROM events e JOIN fe f ON f.user_id = e.user_id
-    )
-    SELECT cohort_day, CAST(age AS BIGINT) AS age_days,
-           CAST(count(*) AS BIGINT) AS active_users
-    FROM act GROUP BY cohort_day, age ORDER BY cohort_day, age_days
-    """,
-    doc="Cohort retention matrix over the events stream: users bucketed by "
-    "first-seen day, activity counted per day-offset from the cohort — "
-    "the classic product-analytics triangle, and for a data pipeline the "
-    "recrawl-behavior analog (how long a discovered source keeps "
-    "producing). Exact date arithmetic (DATE cast + day diff, identical "
-    "in both engines under the session's pinned UTC). Shape: first-seen "
-    "is ONE hash agg on user_id; the age assignment is an equi-join back "
-    "on user_id (map-side combine on the distinct); the matrix is one "
-    "more hash agg — no windows, no driver state, linear in events.",
-)
-def cohort_retention(spark, sf_dir):
-    e = load(spark, sf_dir, "events")
-    fe = e.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("c"))
-    act = (
-        e.join(fe, "user_id")
-        .select(
-            "user_id",
-            F.col("c").alias("cohort_day"),
-            F.datediff(F.to_date("ts"), F.col("c")).alias("age"),
-        )
-        .distinct()
-    )
-    return (
-        act.groupBy("cohort_day", "age")
-        .agg(F.count("*").cast("long").alias("active_users"))
-        .select(
-            "cohort_day",
-            F.col("age").cast("long").alias("age_days"),
-            "active_users",
-        )
-        .orderBy("cohort_day", "age_days")
-    )
-
-
-@register(
-    "funnel_conversion",
-    oracle="""
-    WITH f AS (
-      SELECT user_id,
-             min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-             min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-             min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_buy
-      FROM events GROUP BY user_id
-    ),
-    s AS (
-      SELECT user_id,
-             CASE WHEN t_view IS NULL THEN 0
-                  WHEN t_click IS NULL OR t_click < t_view THEN 1
-                  WHEN t_buy IS NULL OR t_buy < t_click THEN 2
-                  ELSE 3 END AS depth
-      FROM f
-    )
-    SELECT CAST(depth AS BIGINT) AS depth,
-           CAST(count(*) AS BIGINT) AS users
-    FROM s GROUP BY depth ORDER BY depth
-    """,
-    doc="Ordered funnel conversion (view -> click -> purchase): per user, "
-    "the deepest step reached IN ORDER — a later step only counts if its "
-    "FIRST occurrence follows the first occurrence of the previous step "
-    "(the strict-sequence funnel; unordered set-membership funnels "
-    "overcount). Depth 0 = never viewed, 3 = full conversion. Shape: the "
-    "whole funnel is ONE conditional-min hash agg per user (map-side "
-    "partial) + row-local CASE ladder + one tiny depth agg — no windows, "
-    "no self-joins, no event ordering shuffle; timestamps compare "
-    "exactly so every engine agrees on the depth.",
-)
-def funnel_conversion(spark, sf_dir):
-    e = load(spark, sf_dir, "events")
-    f = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("t_buy"),
-    )
-    depth = (
-        F.when(F.col("t_view").isNull(), F.lit(0))
-        .when(
-            F.col("t_click").isNull() | (F.col("t_click") < F.col("t_view")),
-            F.lit(1),
-        )
-        .when(
-            F.col("t_buy").isNull() | (F.col("t_buy") < F.col("t_click")),
-            F.lit(2),
-        )
-        .otherwise(F.lit(3))
-    )
-    return (
-        f.select(depth.alias("depth"))
-        .groupBy("depth")
-        .agg(F.count("*").cast("long").alias("users"))
-        .select(F.col("depth").cast("long").alias("depth"), "users")
-        .orderBy("depth")
-    )
-
-
-_EVQ_PCTS = [50, 95]  # integer percents; exact-rank arithmetic
-
-
-@register(
-    "event_value_quantiles",
-    oracle=f"""
-    WITH spine AS (
-      SELECT event_type, value, CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY event_type, value
-    ),
-    cum AS (
-      SELECT event_type, value, cnt,
-             sum(cnt) OVER (PARTITION BY event_type ORDER BY value
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      FROM spine
-    ),
-    tot AS (
-      SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n FROM spine
-      GROUP BY event_type
-    ),
-    grid AS (SELECT unnest([{", ".join(str(p) for p in _EVQ_PCTS)}]) AS pct)
-    SELECT c.event_type, g.pct,
-           min(c.value) AS value_at,
-           CAST((g.pct * t.n + 99) // 100 AS BIGINT) AS target_rank,
-           t.n AS n_events
-    FROM grid g
-    JOIN tot t ON TRUE
-    JOIN cum c ON c.event_type = t.event_type
-             AND c.cum >= (g.pct * t.n + 99) // 100
-    GROUP BY c.event_type, g.pct, t.n
-    ORDER BY c.event_type, g.pct
-    """,
-    doc="EXACT per-event-type value quantiles (p50/p95) — the grouped form "
-    "of length_quantiles' spine trick: the corpus collapses to the "
-    "(type, value) distinct spine in ONE hash agg (bounded by distinct "
-    "value count per type, corpus-size-independent for priced/bucketed "
-    "values), the cumulative window is PARTITIONED by type so no global "
-    "ordering exists anywhere, and the quantile rule is integer rank "
-    "arithmetic (target = ceil(p·n/100), answer = min value whose "
-    "cumulative count reaches it) — bit-identical across engines, which "
-    "approx_percentile can never be. The per-type latency/price p95 is "
-    "the SLO number a pipeline alerts on.",
-)
-def event_value_quantiles(spark, sf_dir):
-    e = load(spark, sf_dir, "events")
-    spine = e.groupBy("event_type", "value").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    cum = spine.withColumn(
-        "cum",
-        F.sum("cnt").over(
-            W.partitionBy("event_type")
-            .orderBy("value")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        ),
-    )
-    tot = spine.groupBy("event_type").agg(F.sum("cnt").cast("long").alias("n"))
-    grid = spark.createDataFrame([(p,) for p in _EVQ_PCTS], "pct int")
-    target = F.expr("(pct * n + 99) div 100")
-    return (
-        cum.join(tot, "event_type")
-        .crossJoin(F.broadcast(grid))
-        .filter(F.col("cum") >= target)
-        .groupBy("event_type", "pct", "n")
-        .agg(F.min("value").alias("value_at"))
-        .select(
-            "event_type",
-            "pct",
-            "value_at",
-            target.cast("long").alias("target_rank"),
-            F.col("n").alias("n_events"),
-        )
-        .orderBy("event_type", "pct")
-    )

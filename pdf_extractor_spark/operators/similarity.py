@@ -155,9 +155,9 @@ def assign_buckets_explode(emb_df):
     doc="Embedding-cosine near-duplicate pairs (threshold 0.38 for the "
     "synthetic fixture) — SMALL-SCALE GROUND TRUTH ONLY: an explicit "
     "all-pairs join over a 120-vector window, O(N²) by construction, kept "
-    "as the exhaustive recall baseline the bucketed form is judged "
-    "against. The scale path is emb_near_dup_bucketed below (same cosine "
-    "predicate inside LSH buckets — linear-ish candidate generation).",
+    "as the exhaustive recall baseline the banded form is judged "
+    "against. The scale path is emb_near_dup_multiband below (same cosine "
+    "predicate inside multi-band LSH buckets).",
 )
 def emb_near_dup(spark, sf_dir):
     emb = _with_norm(load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 120))
@@ -170,83 +170,6 @@ def emb_near_dup(spark, sf_dir):
     )
     return (
         a.join(b, F.col("va") < F.col("vb"))
-        .filter(dot / (F.col("na") * F.col("nb")) >= 0.38)
-        .select("va", "vb")
-    )
-
-
-@register(
-    "emb_near_dup_bucketed",
-    oracle=f"""
-    WITH proj AS (
-      SELECT e.vec_id, p.j,
-             sum(e.x * ({_COEF_SQL})) AS dot
-      FROM (SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-                   generate_subscripts(embedding, 1) - 1 AS i
-            FROM embeddings) e
-      CROSS JOIN (SELECT unnest(range(0, {_N_PLANES})) AS j) p
-      GROUP BY e.vec_id, p.j
-    ),
-    sig AS (
-      SELECT vec_id,
-             CAST(sum(CASE WHEN dot > 0 THEN CAST(1 AS BIGINT) << CAST(j AS INT) ELSE 0 END) AS BIGINT) AS bucket
-      FROM proj GROUP BY vec_id
-    ),
-    vecs AS (
-      SELECT s.vec_id, s.bucket, e.embedding::DOUBLE[] AS emb,
-             sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) AS nrm
-      FROM sig s JOIN embeddings e ON s.vec_id = e.vec_id
-    )
-    SELECT a.vec_id AS va, b.vec_id AS vb
-    FROM vecs a JOIN vecs b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) >= 0.38
-    """,
-    doc="Embedding-cosine near-dup pairs at SCALE: the same >=0.38 cosine "
-    "predicate as emb_near_dup, but candidate pairs form only inside "
-    "random-hyperplane LSH buckets (the ann_lsh_buckets sign signature) — "
-    "an equi-join on bucket instead of an all-pairs theta join. Work is "
-    "O(sum of bucket_size²) ~ linear for spread buckets, vs O(N²) for the "
-    "ground-truth form; recall is partial by design (cross-bucket pairs "
-    "missed — add rotated plane sets for multi-band recall, same shape as "
-    "MinHash banding in dedup.py). This is the round-2 answer to the "
-    "round-1 verdict's 'the documented scale path does not exist as code'.",
-)
-def emb_near_dup_bucketed(spark, sf_dir):
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    e = emb.select(
-        "vec_id", F.posexplode("embedding").alias("i", "x")
-    ).select("vec_id", "i", F.col("x").cast("double").alias("x"))
-    planes = spark.range(_N_PLANES).select(F.col("id").cast("int").alias("j"))
-    coef = ((1 + F.col("j")) * (F.col("i") * F.col("i") + 3 * F.col("i") + 7)) % 19 - 9
-    sig = (
-        e.crossJoin(F.broadcast(planes))
-        .groupBy("vec_id", "j")
-        .agg(F.sum(F.col("x") * coef).alias("dot"))
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("dot") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), j)")
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("bucket")
-        )
-    )
-    vecs = sig.join(emb, "vec_id").select("vec_id", "bucket", "embedding", "nrm")
-    a = vecs.select(
-        F.col("vec_id").alias("va"), F.col("bucket").alias("ba"),
-        F.col("embedding").alias("ea"), F.col("nrm").alias("na"),
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("vb"), F.col("bucket").alias("bb"),
-        F.col("embedding").alias("eb"), F.col("nrm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(b, (F.col("ba") == F.col("bb")) & (F.col("va") < F.col("vb")))
         .filter(dot / (F.col("na") * F.col("nb")) >= 0.38)
         .select("va", "vb")
     )
@@ -442,10 +365,6 @@ def emb_norm_stats(spark, sf_dir):
 
 _N_CELLS = 4
 
-# deterministic integer "centroid" planes: cent(k, i) = ((2+k)*(i*i + 5*i + 11)) % 17 - 8
-# — a stand-in for k-means centroids that both engines compute exactly.
-_CENT_SQL = "((2 + k) * (i * i + 5 * i + 11)) % 17 - 8"
-
 
 def _plane_matrix(dim: int):
     """The _COEF_SQL hyperplanes as a numpy [_N_PLANES, dim] int matrix."""
@@ -454,15 +373,6 @@ def _plane_matrix(dim: int):
     i = np.arange(dim, dtype=np.int64)
     j = np.arange(_N_PLANES, dtype=np.int64)[:, None]
     return (1 + j) * (i * i + 3 * i + 7) % 19 - 9
-
-
-def _cent_matrix(dim: int):
-    """The _CENT_SQL centroids as a numpy [_N_CELLS, dim] int matrix."""
-    import numpy as np
-
-    i = np.arange(dim, dtype=np.int64)
-    k = np.arange(_N_CELLS, dtype=np.int64)[:, None]
-    return (2 + k) * (i * i + 5 * i + 11) % 17 - 8
 
 
 def assign_buckets_vectorized(emb_df):
@@ -554,208 +464,6 @@ def assign_band_buckets_vectorized(emb_df):
 
     return emb_df.select("vec_id", "embedding").mapInPandas(
         assign, schema="vec_id long, r int, bucket long"
-    )
-
-
-def assign_cells_vectorized(emb_df):
-    """IVF coarse-quantizer cell assignment via numpy matmul (argmax over
-    centroid dots) — the zero-inflation twin of ann_ivf_probe's explode
-    form; equality pinned by tests/test_operators.py."""
-    import numpy as np
-    import pandas as pd
-
-    def assign(batches):
-        cents = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            if cents is None or cents.shape[1] != E.shape[1]:
-                cents = _cent_matrix(E.shape[1]).astype(np.float64)
-            dots = E @ cents.T  # [n, cells]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": np.argmax(dots, axis=1).astype(np.int64)}
-            )
-
-    return emb_df.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, cell long"
-    )
-
-
-def _ivf_cells(spark, sf_dir):
-    """Coarse-quantizer assignment keeping per-cell dots (shared by the
-    single-probe and multi-probe IVF queries)."""
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    e = emb.select(
-        "vec_id", "nrm", "embedding",
-        F.posexplode("embedding").alias("i", "x"),
-    ).select("vec_id", "nrm", "embedding", "i", F.col("x").cast("double").alias("x"))
-    ks = spark.range(_N_CELLS).select(F.col("id").cast("int").alias("k"))
-    cent = ((2 + F.col("k")) * (F.col("i") * F.col("i") + 5 * F.col("i") + 11)) % 17 - 8
-    return (
-        e.crossJoin(F.broadcast(ks))
-        .groupBy("vec_id", "k")
-        .agg(
-            F.sum(F.col("x") * cent).alias("e_dot"),
-            F.first("nrm").alias("nrm"),
-            F.first("embedding").alias("e"),
-        )
-    )
-
-
-@register(
-    "ann_ivf_multiprobe",
-    oracle=f"""
-    WITH dots AS (
-      SELECT e.vec_id, c.k, c.e_dot, e.nrm, e.e
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS e,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-            FROM embeddings) e
-      CROSS JOIN LATERAL (
-        SELECT k, sum(x * ({_CENT_SQL})) AS e_dot
-        FROM (SELECT unnest(e.e) AS x, generate_subscripts(e.e, 1) - 1 AS i)
-        CROSS JOIN (SELECT unnest(range(0, {_N_CELLS})) AS k)
-        GROUP BY k
-      ) c
-    ),
-    ranked AS (
-      SELECT vec_id, k, nrm, e,
-             row_number() OVER (PARTITION BY vec_id ORDER BY e_dot DESC, k) AS cr
-      FROM dots
-    ),
-    qcells AS (SELECT vec_id, k FROM ranked WHERE vec_id < 5 AND cr <= 2),
-    vcells AS (SELECT vec_id, k, nrm, e FROM ranked WHERE cr = 1)
-    SELECT query_id, neighbor_id, rank FROM (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_dot_product(qe.e, v.e) / (qe.nrm * v.nrm) DESC, v.vec_id
-             ) AS rank
-      FROM qcells q
-      JOIN vcells qe ON qe.vec_id = q.vec_id
-      JOIN vcells v ON v.k = q.k AND q.vec_id <> v.vec_id
-    ) WHERE rank <= 3
-    """,
-    doc="Multi-probe IVF ANN: each query probes its TOP-2 centroid cells "
-    "instead of one (Jégou et al. '11 multi-probe refinement of the "
-    "inverted-file scheme) — the recall/cost knob of IVF search: recall "
-    "rises toward the brute-force baseline while candidate cost stays "
-    "O(Q·p·N/cells), still an equi-join on cell (never a cross join). "
-    "Corpus vectors stay in their single argmax cell; only the tiny query "
-    "side fans out ×p. Single-probe (`ann_ivf_probe`) and ground truth "
-    "(`ann_cosine_topk`) bracket this operator.",
-)
-def ann_ivf_multiprobe(spark, sf_dir):
-    cells = _ivf_cells(spark, sf_dir)
-    w = W.partitionBy("vec_id").orderBy(F.desc("e_dot"), F.asc("k"))
-    ranked = cells.withColumn("cr", F.row_number().over(w))
-    qcells = (
-        ranked.filter((F.col("vec_id") < 5) & (F.col("cr") <= 2))
-        .select(F.col("vec_id").alias("query_id"), F.col("k").alias("qk"))
-    )
-    qvecs = ranked.filter((F.col("vec_id") < 5) & (F.col("cr") == 1)).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    v = ranked.filter(F.col("cr") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("k").alias("vk"),
-        F.col("e").alias("ve"), F.col("nrm").alias("vn"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "ve", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = dot / (F.col("qn") * F.col("vn"))
-    rank_w = W.partitionBy("query_id").orderBy(sim.desc(), F.asc("neighbor_id"))
-    return (
-        F.broadcast(qcells.join(qvecs, "query_id"))
-        .join(v, (F.col("qk") == F.col("vk")) & (F.col("query_id") != F.col("neighbor_id")))
-        .withColumn("rank", F.row_number().over(rank_w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
-
-@register(
-    "ann_ivf_probe",
-    oracle=f"""
-    WITH cells AS (  -- coarse quantizer: cell = argmax_k dot(e, centroid_k)
-      SELECT e.vec_id, arg_max(c.k, e_dot) AS cell, any_value(e.nrm) AS nrm,
-             any_value(e.e) AS e
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS e,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-            FROM embeddings) e
-      CROSS JOIN LATERAL (
-        SELECT k, sum(x * ({_CENT_SQL})) AS e_dot
-        FROM (SELECT unnest(e.e) AS x, generate_subscripts(e.e, 1) - 1 AS i)
-        CROSS JOIN (SELECT unnest(range(0, {_N_CELLS})) AS k)
-        GROUP BY k
-      ) c
-      GROUP BY e.vec_id
-    )
-    SELECT query_id, neighbor_id, rank FROM (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_dot_product(q.e, v.e) / (q.nrm * v.nrm) DESC, v.vec_id
-             ) AS rank
-      FROM cells q JOIN cells v ON q.cell = v.cell AND q.vec_id <> v.vec_id
-      WHERE q.vec_id < 5
-    ) WHERE rank <= 3
-    """,
-    doc="IVF-style ANN (coarse quantizer → probe own cell only; Jégou et al. "
-    "'11 inverted-file scheme with deterministic integer centroids instead "
-    "of trained k-means). Search cost drops from O(Q·N) to O(Q·N/cells): "
-    "cell assignment is one narrow agg, and candidate generation is an "
-    "equi-join on cell — the same bucket-join shape that scales the LSH "
-    "and MinHash paths. Recall vs ann_cosine_topk is partial by design "
-    "(single-probe); multi-probe = relax the cell equality to top-p cells.",
-)
-def ann_ivf_probe(spark, sf_dir):
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    e = emb.select(
-        "vec_id", "nrm", "embedding",
-        F.posexplode("embedding").alias("i", "x"),
-    ).select("vec_id", "nrm", "embedding", "i", F.col("x").cast("double").alias("x"))
-    ks = spark.range(_N_CELLS).select(F.col("id").cast("int").alias("k"))
-    cent = ((2 + F.col("k")) * (F.col("i") * F.col("i") + 5 * F.col("i") + 11)) % 17 - 8
-    cells = (
-        e.crossJoin(F.broadcast(ks))
-        .groupBy("vec_id", "k")
-        .agg(
-            F.sum(F.col("x") * cent).alias("e_dot"),
-            F.first("nrm").alias("nrm"),
-            F.first("embedding").alias("e"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by("k", "e_dot").alias("cell"),
-            F.first("nrm").alias("nrm"),
-            F.first("e").alias("e"),
-        )
-    )
-    q = cells.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("cell").alias("qc"),
-        F.col("e").alias("qe"), F.col("nrm").alias("qn"),
-    )
-    v = cells.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("cell").alias("vc"),
-        F.col("e").alias("ve"), F.col("nrm").alias("vn"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "ve", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = dot / (F.col("qn") * F.col("vn"))
-    w = W.partitionBy("query_id").orderBy(sim.desc(), F.asc("neighbor_id"))
-    return (
-        F.broadcast(q)
-        .join(v, (F.col("qc") == F.col("vc")) & (F.col("query_id") != F.col("neighbor_id")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank")
     )
 
 
@@ -925,15 +633,15 @@ def _lloyd_oracle_sql(n_cells: int, n_iters: int, train_n: int = _IVF_TRAIN_N) -
     oracle=_lloyd_oracle_sql(_N_CELLS, _LLOYD_ITERS),
     doc="IVF ANN with a TRAINED coarse quantizer: deterministic seeded "
     "Lloyd k-means (fixed rounds, data-point init, ties to lowest cell) "
-    "replaces ann_ivf_probe's integer stand-in centroids — the quantizer "
-    "now adapts to the data distribution, which is what makes IVF recall "
+    "assigns each vector to its nearest centroid — the quantizer adapts "
+    "to the data distribution, which is what makes IVF recall "
     "real (Jégou et al. '11 train their coarse quantizer with k-means). "
     "Training runs on a bounded deterministic prefix sample (vec_id < "
     f"{_IVF_TRAIN_N}, FAISS-style — k-means needs O(100×cells) points, "
     "not 3 passes over 10^12 vectors): assignment-broadcast + one "
     "groupBy(cell,dim) avg per round with ≤ cells×dim rows to the driver "
-    "(MLlib-style); search is the same equi-join-on-cell as the untrained "
-    "form over the FULL corpus. The DuckDB oracle unrolls the SAME Lloyd "
+    "(MLlib-style); search is an equi-join on cell (the query probes its "
+    "own cell) over the FULL corpus. The DuckDB oracle unrolls the SAME Lloyd "
     "rounds over the same sample as chained CTEs, so the training itself "
     "is hash-verified.",
 )

@@ -901,10 +901,12 @@ def encrypt_pdf(
     `aes256-r5` (the deprecated single-SHA-256 revision). Both ciphers
     are pinned by published vectors in tests, so twin and kernel cannot
     share a mirrored bug; AES modes rewrite each stream's direct /Length
-    to the IV+CBC ciphertext size (RC4 is length-preserving). Raises when
-    a stream lacks a direct /Length dict or the ciphertext would break
-    object/stream framing — fixture construction is fail-fast, never
-    silently unparseable.
+    to the IV+CBC ciphertext size (RC4 is length-preserving). Each body
+    is framed by its /Length, as the kernel reads it. Raises when a stream
+    lacks /Length (or, under AES, a direct one), when its body disagrees
+    with /Length, or when the ciphertext would break object/stream
+    framing — fixture construction is fail-fast, never silently
+    unparseable.
     """
     import re as _re
     import struct as _struct
@@ -977,9 +979,11 @@ def encrypt_pdf(
     aes = mode in ("aesv2", "aes256", "aes256-r5")
 
     obj_re = _re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)\bendobj", _re.DOTALL)
-    stream_re = _re.compile(rb"stream\r?\n(.*?)\r?\nendstream", _re.DOTALL)
+    stream_re = _re.compile(rb"stream\r?\n")
     dlen_re = _re.compile(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)")
+    ilen_re = _re.compile(rb"/Length\s+(\d+)\s+\d+\s+R")
     nums = [int(m.group(1)) for m in obj_re.finditer(raw)]
+    objs = {int(m.group(1)): m.group(2) for m in obj_re.finditer(raw)}
     out = bytearray()
     last = 0
     for m in obj_re.finditer(raw):
@@ -987,18 +991,28 @@ def encrypt_pdf(
         sm = stream_re.search(body)
         if sm is None:
             continue
-        dicthead = body[: sm.start(1)]
-        if b"/Length" not in dicthead:
+        # frame the body by its /Length, as the kernel does: a binary body
+        # may itself end in b"\r", which an EOL-before-endstream regex drops
+        dicthead = body[: sm.end()]
+        dm, im = dlen_re.search(dicthead), ilen_re.search(dicthead)
+        if dm is not None:
+            n = int(dm.group(1))
+        elif im is not None:
+            n = int(objs[int(im.group(1))])
+        else:
             raise ValueError("stream without /Length cannot be framed once encrypted")
+        plain, rest = body[sm.end() : sm.end() + n], body[sm.end() + n :]
+        if not _re.match(rb"\r?\n?endstream", rest):
+            raise ValueError("stream body disagrees with its /Length")
         if aes:
-            ct = crypt.encrypt_stream(num, sm.group(1))
-            if dlen_re.search(dicthead) is None:
+            ct = crypt.encrypt_stream(num, plain)
+            if dm is None:
                 raise ValueError("AES twin requires a direct /Length to rewrite")
             dicthead = dlen_re.sub(b"/Length %d" % len(ct), dicthead, count=1)
         else:
-            ct = crypt.encrypt(num, sm.group(1))
+            ct = crypt.encrypt(num, plain)
         out += raw[last : m.start(2)]
-        out += dicthead + ct + body[sm.end(1) :]
+        out += dicthead + ct + rest
         last = m.end(2)
     out += raw[last:]
 

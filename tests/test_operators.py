@@ -47,9 +47,6 @@ SUBSET = [
     "s2_suffix_scan",
     "x14_url_pattern",
     "t6_session_window",
-    "ann_ivf_probe",
-    "ann_ivf_multiprobe",
-    "emb_near_dup_bucketed",
     "dedup_components",
     "training_corpus_pipeline",
     "g1_grouped_trend",
@@ -65,7 +62,6 @@ SUBSET = [
     "url_canonical",
     "text_unigram_nll",
     "host_stats_salted",
-    "dedup_substring",
     # round-5 additions
     "semdedup",
     "sample_temperature",
@@ -120,16 +116,26 @@ def test_all_registered_ops_have_docs():
         assert op.doc, f"{name} missing doc"
 
 
+def test_driver_query_order():
+    """queries() leads with extract_pipeline, holds every registered op
+    exactly once, and puts the never-driver-verified ops inside the
+    driver's 50-query window."""
+    import __spark_entry__ as entrymod
+
+    names = list(entrymod.queries())
+    assert names[0] == "extract_pipeline"
+    assert sorted(names[1:]) == sorted(all_ops())
+    assert set(entrymod.NEVER_DRIVER_VERIFIED) <= set(names[:50])
+
+
 def test_vectorized_assignment_matches_explode_form(spark):
-    """The numpy-matmul bucket/cell assignment must agree row-for-row with
-    the SQL-parity posexplode form — two physical strategies, one logical
-    op."""
+    """The numpy-matmul bucket assignment must agree row-for-row with the
+    SQL-parity posexplode form — two physical strategies, one logical op."""
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.operators.similarity import (
         _N_PLANES,
         assign_buckets_vectorized,
-        assign_cells_vectorized,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -157,21 +163,6 @@ def test_vectorized_assignment_matches_explode_form(spark):
     vec_buckets = {r.vec_id: r.bucket for r in assign_buckets_vectorized(emb).collect()}
     assert vec_buckets == sql_buckets
 
-    # explode-form cells (same expression as ann_ivf_probe's quantizer)
-    ks = spark.range(4).select(F.col("id").cast("int").alias("k"))
-    cent = ((2 + F.col("k")) * (F.col("i") * F.col("i") + 5 * F.col("i") + 11)) % 17 - 8
-    sql_cells = {
-        r.vec_id: r.cell
-        for r in e.crossJoin(F.broadcast(ks))
-        .groupBy("vec_id", "k")
-        .agg(F.sum(F.col("x") * cent).alias("e_dot"))
-        .groupBy("vec_id")
-        .agg(F.max_by("k", "e_dot").cast("long").alias("cell"))
-        .collect()
-    }
-    vec_cells = {r.vec_id: r.cell for r in assign_cells_vectorized(emb).collect()}
-    assert vec_cells == sql_cells
-
 
 def test_band_vectorized_assignment_matches_explode_form(spark):
     """The multiband numpy-matmul signature must agree row-for-row with the
@@ -195,31 +186,24 @@ def test_band_vectorized_assignment_matches_explode_form(spark):
 
 
 def test_multiband_recall_dominates_single_band(spark):
-    """32 independent md5-seeded bands must land recall >= 0.3 vs the
+    """48 independent md5-seeded bands must land recall >= 0.3 vs the
     exhaustive emb_near_dup ground truth at the adversarial near-threshold
     fixture (every true pair sits at cos ~0.38-0.40, per-plane agreement
-    ~0.63 — the round-4 verdict's weak point at 0.089), dominate the
-    single-band form, and keep precision 1.0 (the cosine predicate is
-    exact in both)."""
+    ~0.63 — the round-4 correlated-plane form measured 0.089), and keep precision
+    1.0 (the cosine predicate is exact)."""
     ops = all_ops()
     truth = {(r.va, r.vb) for r in ops["emb_near_dup"].build(spark, SF_DIR).collect()}
-    single = {
-        (r.va, r.vb)
-        for r in ops["emb_near_dup_bucketed"].build(spark, SF_DIR).collect()
-    }
     multi = {
         (r.va, r.vb)
         for r in ops["emb_near_dup_multiband"].build(spark, SF_DIR).collect()
     }
     assert truth, "ground-truth fixture produced no near-dup pairs"
     # ground truth covers the vec_id < 120 window only
-    single_w = {p for p in single if p[0] < 120 and p[1] < 120}
     multi_w = {p for p in multi if p[0] < 120 and p[1] < 120}
     assert multi_w <= truth  # precision 1.0: every emitted pair is real
-    r_single = len(single_w & truth) / len(truth)
     r_multi = len(multi_w & truth) / len(truth)
-    assert r_multi >= max(r_single, 0.3)
-    print(f"near-dup recall: single-band={r_single:.2f} multiband={r_multi:.2f}")
+    assert r_multi >= 0.3
+    print(f"near-dup recall: multiband={r_multi:.2f}")
 
 
 def test_pin_utc_restores_session_timezone(spark, duck):
@@ -561,18 +545,16 @@ def test_hashed_ngram_classifier_separates_boilerplate(spark):
 
 
 def test_trained_ivf_beats_untrained_recall(spark):
-    """Lloyd-trained coarse quantizer must dominate the integer-centroid
-    stand-in on recall@3 vs the brute-force cosine ground truth — the
-    point of training the quantizer (round-3 verdict #6)."""
+    """The Lloyd-trained coarse quantizer must keep recall@3 >= 0.5 vs the
+    brute-force cosine ground truth (sf0.01 measures 0.867; integer
+    stand-in centroids measured 0.4) — the point of training the quantizer
+    (round-3 verdict #6)."""
     ops = all_ops()
     gt = ops["ann_cosine_topk"].build(spark, SF_DIR).toPandas()
     trained = ops["ann_ivf_trained"].build(spark, SF_DIR).toPandas()
-    untrained = ops["ann_ivf_probe"].build(spark, SF_DIR).toPandas()
     gtp = set(zip(gt.query_id, gt.neighbor_id))
     r_tr = len(set(zip(trained.query_id, trained.neighbor_id)) & gtp) / len(gtp)
-    r_un = len(set(zip(untrained.query_id, untrained.neighbor_id)) & gtp) / len(gtp)
-    assert r_tr >= r_un
-    assert r_tr >= 0.5  # sf0.01 measures 0.867 vs untrained 0.4
+    assert r_tr >= 0.5
 
 
 def test_gopher_suite_metrics_hand_computed(spark):
@@ -933,24 +915,6 @@ def test_pack_windows_reconstruct_stream_and_agree_with_plan(spark):
         for s in range(p["seq_id"], p["seq_id"] + p["n_seqs"]):
             straddle[s] += 1
     assert {r["seq_id"]: r["n_docs"] for r in rows} == dict(straddle)
-
-
-def test_dedup_substring_consistent_with_minhash_family(spark):
-    """Substring-duplication sanity: docs the MinHash-LSH pass pairs as
-    near-dups must show high cross-doc 5-gram overlap, and the corpus
-    baseline must sit far below — the signal separates, it isn't noise."""
-    ops = all_ops()
-    frac = {
-        r["doc_id"]: r["dup_frac"]
-        for r in ops["dedup_substring"].build(spark, SF_DIR).collect()
-    }
-    pairs = ops["dedup_minhash_lsh"].build(spark, SF_DIR).collect()
-    assert pairs, "minhash fixture produced no near-dup pairs"
-    near_ids = {d for r in pairs for d in (r["da"], r["db"])}
-    near = [frac[d] for d in near_ids if d in frac]
-    rest = [v for d, v in frac.items() if d not in near_ids]
-    assert min(near) > 0.5, min(near)  # near-dups share most grams
-    assert sum(rest) / len(rest) < 0.2  # background stays low
 
 
 def test_ngram_ops_tolerate_short_docs(spark):
@@ -2050,78 +2014,6 @@ def test_sample_reservoir_exact_k_and_partition_invariant(spark, tmp_path):
     assert len(got1) == 50 and got1 == got2
 
 
-def test_cohort_retention_hand_matrix(spark, tmp_path):
-    """Two users, hand-dated events: u1 first seen day 0 and active on
-    days 0/1/3 (two events on day 1 collapse to one active mark); u2
-    first seen day 1, active day 1 only. The matrix must be exactly
-    those cells."""
-    import datetime
-    import pandas as pd
-
-    d = datetime.datetime
-    rows = [
-        (0, d(2024, 1, 1, 9), 1, "view", 1.0, "{}"),
-        (1, d(2024, 1, 2, 9), 1, "view", 1.0, "{}"),
-        (2, d(2024, 1, 2, 15), 1, "click", 1.0, "{}"),  # same day as above
-        (3, d(2024, 1, 4, 9), 1, "view", 1.0, "{}"),
-        (4, d(2024, 1, 2, 10), 2, "view", 1.0, "{}"),
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # Spark can't read NANOS
-    pdf.to_parquet(f"{tmp_path}/events.parquet")
-    got = all_ops()["cohort_retention"].build(spark, str(tmp_path)).toPandas()
-    cells = {
-        (str(r.cohort_day), r.age_days): r.active_users for _, r in got.iterrows()
-    }
-    assert cells == {
-        ("2024-01-01", 0): 1,
-        ("2024-01-01", 1): 1,
-        ("2024-01-01", 3): 1,
-        ("2024-01-02", 0): 1,
-    }
-
-
-def test_funnel_conversion_strict_order(spark, tmp_path):
-    """Strict-sequence semantics on hand-dated users: u1 converts fully in
-    order (depth 3); u2 clicked BEFORE first viewing (depth 1 — the
-    ordering rule unordered funnels get wrong); u3 viewed+clicked but
-    purchased before clicking (depth 2); u4 never viewed (depth 0)."""
-    import datetime
-    import pandas as pd
-
-    d = datetime.datetime
-    rows = [
-        # u1: view < click < purchase
-        (0, d(2024, 1, 1, 9), 1, "view", 1.0, "{}"),
-        (1, d(2024, 1, 1, 10), 1, "click", 1.0, "{}"),
-        (2, d(2024, 1, 1, 11), 1, "purchase", 1.0, "{}"),
-        # u2: click at 8, first view at 9 -> stuck at depth 1
-        (3, d(2024, 1, 1, 8), 2, "click", 1.0, "{}"),
-        (4, d(2024, 1, 1, 9), 2, "view", 1.0, "{}"),
-        # u3: view 9 < click 10, but purchase at 9:30 precedes click
-        (5, d(2024, 1, 1, 9), 3, "view", 1.0, "{}"),
-        (6, d(2024, 1, 1, 10), 3, "click", 1.0, "{}"),
-        (7, d(2024, 1, 1, 9, 30), 3, "purchase", 1.0, "{}"),
-        # u4: errors only
-        (8, d(2024, 1, 1, 9), 4, "error", 1.0, "{}"),
-    ]
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.to_parquet(f"{tmp_path}/events.parquet")
-    got = (
-        all_ops()["funnel_conversion"].build(spark, str(tmp_path)).toPandas()
-        .set_index("depth")
-    )
-    assert got.loc[0].users == 1
-    assert got.loc[1].users == 1
-    assert got.loc[2].users == 1
-    assert got.loc[3].users == 1
-
-
 def test_host_components_islands(spark, tmp_path):
     """The md5 draw only targets EXISTING doc_ids, so two doc-id islands
     with disjoint hosts cannot cross-link... except draws land anywhere
@@ -2146,29 +2038,3 @@ def test_host_components_islands(spark, tmp_path):
     assert got.n_hosts.sum() == 7  # every host in exactly one component
     # each component label is a member host (lexical min) of that component
     assert set(got.component).issubset({f"h{i}.example" for i in range(7)})
-
-
-def test_event_value_quantiles_grouped_exact(spark, tmp_path):
-    """Two types with hand-set values: type A has values 1..10 (p50 -> 5,
-    p95 -> 10); type B has a single repeated value (both quantiles equal
-    it); ranks follow ceil(p*n/100) exactly."""
-    import datetime
-    import pandas as pd
-
-    ts = datetime.datetime(2024, 1, 1)
-    rows = [(i, ts, 1, "a", float(i + 1), "{}") for i in range(10)]
-    rows += [(100 + i, ts, 2, "b", 7.5, "{}") for i in range(4)]
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
-    )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.to_parquet(f"{tmp_path}/events.parquet")
-    got = (
-        all_ops()["event_value_quantiles"].build(spark, str(tmp_path)).toPandas()
-        .set_index(["event_type", "pct"])
-    )
-    assert got.loc[("a", 50)].value_at == 5.0
-    assert got.loc[("a", 50)].target_rank == 5
-    assert got.loc[("a", 95)].value_at == 10.0  # ceil(9.5) = 10th of 10
-    assert got.loc[("b", 50)].value_at == 7.5
-    assert got.loc[("b", 95)].value_at == 7.5

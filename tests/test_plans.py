@@ -218,24 +218,6 @@ def test_dedup_keep_best_result_is_distributed(spark):
     assert "ExistingRDD" in plan or "Scan" in plan
 
 
-def test_bucketed_near_dup_pairs_join_on_bucket(spark):
-    """emb_near_dup_bucketed's PAIR join must be a hash join on the bucket
-    key (cosine + va<vb as residual condition) — the only nested-loop join
-    allowed in the plan is the 8-row hyperplane broadcast cross."""
-    import re
-
-    from pdf_extractor_spark.operators.registry import all_ops
-
-    plan = _plan(all_ops()["emb_near_dup_bucketed"].build(spark, SF_DIR))
-    # pair join: hash join keyed on the bucket aliases
-    assert re.search(r"BroadcastHashJoin \[ba#\d+L?\], \[bb#\d+L?\]", plan) or re.search(
-        r"ShuffledHashJoin \[ba#\d+L?\], \[bb#\d+L?\]", plan
-    ) or re.search(r"SortMergeJoin \[ba#\d+L?\], \[bb#\d+L?\]", plan)
-    # any NLJ present must be the tiny planes cross-broadcast, never Inner
-    for m in re.finditer(r"BroadcastNestedLoopJoin BuildRight, (\w+)", plan):
-        assert m.group(1) == "Cross"
-
-
 def test_multiband_near_dup_joins_on_band_and_bucket(spark):
     """emb_near_dup_multiband: candidate generation must be an equi-join
     keyed on (band, bucket) — never a cartesian pair enumeration — and the
@@ -979,30 +961,6 @@ def test_sample_reservoir_is_take_ordered(spark):
     assert "rangepartitioning" not in plan
 
 
-def test_cohort_retention_is_two_hash_aggs(spark):
-    """Cohort assignment is one hash agg + an equi-join back; the matrix a
-    second hash agg — no windows, no cartesian, no Python."""
-    from pdf_extractor_spark.operators.registry import all_ops
-
-    plan = _plan(all_ops()["cohort_retention"].build(spark, SF_DIR))
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-    assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
-    assert "hashpartitioning(user_id" in plan
-
-
-def test_funnel_conversion_single_event_pass(spark):
-    """The whole funnel must cost ONE pass over events (conditional-min
-    hash agg with map-side partial) — no window, no self-join of the
-    events table, no Python."""
-    from pdf_extractor_spark.operators.registry import all_ops
-
-    plan = _plan(all_ops()["funnel_conversion"].build(spark, SF_DIR))
-    assert "Window" not in plan
-    assert plan.count("FileScan parquet") == 1  # events scanned exactly once
-    assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
-
-
 def test_host_components_result_is_distributed(spark):
     """Like dedup_components: the final component table must scan pinned
     executor blocks, never a driver LocalTableScan, with no Python."""
@@ -1013,15 +971,3 @@ def test_host_components_result_is_distributed(spark):
     assert "LocalTableScan" not in plan
     assert "ExistingRDD" in plan or "Scan" in plan
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
-
-
-def test_event_value_quantiles_window_partitioned_by_type(spark):
-    """The cumulative window must be PARTITIONED by event_type over the
-    aggregated (type, value) spine — no SinglePartition window, no
-    Python; events collapse in one hash agg first."""
-    from pdf_extractor_spark.operators.registry import all_ops
-
-    plan = _plan(all_ops()["event_value_quantiles"].build(spark, SF_DIR))
-    assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
-    assert "hashpartitioning(event_type" in plan
-    assert "Exchange SinglePartition" not in plan
