@@ -49,12 +49,13 @@ class BucketingMismatchError(RuntimeError):
     """Control dir was written under a different n_buckets than the run's."""
 
 
-def read_control(spark: SparkSession, control_dir: str) -> DataFrame:
-    """Control table, or an empty frame if no run has committed yet."""
-    try:
-        return spark.read.schema(CONTROL_SCHEMA).parquet(control_dir)
-    except Exception:  # AnalysisException: path does not exist
-        return spark.createDataFrame([], CONTROL_SCHEMA)
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists, asked of the Hadoop FileSystem that serves
+    it (local, hdfs://, s3a://, …) — no Spark job, no exception on a
+    fresh control dir."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
 
 
 def committed_partitions(
@@ -62,29 +63,42 @@ def committed_partitions(
 ) -> DataFrame:
     """Distinct committed partition ids — the anti-join build side (J3).
 
-    Small by construction (≤ n_buckets rows) → always broadcast. When the
-    caller's `n_buckets` is given, rows committed under a DIFFERENT
-    bucketing raise BucketingMismatchError: their partition ids were
-    computed with another modulus, so honoring them would skip uncommitted
-    work (or re-run committed work) undetectably. Rows with a null
-    n_buckets (pre-upgrade control dirs) are accepted as-is.
+    The control table is read in ONE pass: its (partition_id, n_buckets)
+    pairs (≤ one row per committed partition) are collected to the driver,
+    and a missing control dir skips the read altogether. The ids come back
+    as a local relation, so collecting or broadcasting them launches no
+    further Spark job. When the caller's `n_buckets` is given, rows
+    committed under a DIFFERENT bucketing raise BucketingMismatchError:
+    their partition ids were computed with another modulus, so honoring
+    them would skip uncommitted work (or re-run committed work)
+    undetectably. Rows with a null n_buckets (pre-upgrade control dirs) are
+    accepted, and their ids outside [0, n_buckets) dropped.
     """
-    ctl = read_control(spark, control_dir).filter(F.col("status") == STATUS_COMMITTED)
+    import pyarrow as pa
+
+    pairs = set()
+    if _exists(spark, control_dir):
+        pairs = {
+            (r.partition_id, r.n_buckets)
+            for r in spark.read.schema(CONTROL_SCHEMA)
+            .parquet(control_dir)
+            .filter(F.col("status") == STATUS_COMMITTED)
+            .select("partition_id", "n_buckets")
+            .collect()
+        }
+    ids = {pid for pid, _ in pairs}
     if n_buckets is not None:
-        # ≤ a handful of distinct values — driver-side check is O(1)
-        stamped = [
-            r.n_buckets
-            for r in ctl.select("n_buckets").distinct().collect()
-            if r.n_buckets is not None
-        ]
-        bad = [b for b in stamped if b != n_buckets]
+        bad = {b for _, b in pairs if b is not None and b != n_buckets}
         if bad:
             raise BucketingMismatchError(
                 f"control dir {control_dir} was committed with n_buckets="
-                f"{sorted(set(bad))}, current run uses {n_buckets}; refusing "
+                f"{sorted(bad)}, current run uses {n_buckets}; refusing "
                 "to resume with a mismatched bucketing"
             )
-    return ctl.select("partition_id").distinct()
+        ids = {pid for pid in ids if 0 <= pid < n_buckets}
+    return spark.createDataFrame(
+        pa.table({"partition_id": pa.array(sorted(ids), pa.int32())})
+    )
 
 
 def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) -> None:

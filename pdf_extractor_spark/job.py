@@ -3,7 +3,7 @@
     spark-submit --py-files pdf_extractor_spark.zip pdf_extractor_spark/job.py \
         --input /path/to/pages_parquet  (or --synth N to generate pages) \
         --output /path/out --control /path/control \
-        [--n-buckets 64] [--salt-factor 8]
+        [--n-buckets 64]
 
 Replaces the reference's `pdf-extractor <config> <in> <out>` console script
 (reference: pyproject.toml:27, cli.py:63-124) with a cluster job: same
@@ -47,7 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--output", required=True, help="output parquet dir (partitioned by partition_id)")
     p.add_argument("--control", required=True, help="control-table parquet dir (checkpoint/lineage)")
     p.add_argument("--n-buckets", type=int, default=64, help="url-hash partition count")
-    p.add_argument("--salt-factor", type=int, default=8, help="skew salt fan-out per bucket")
     p.add_argument("--enrich", metavar="DIR", default=None,
                    help="also write quality-enriched output (lang/tokens/quality_ok) to DIR")
     p.add_argument("--training-out", metavar="DIR", default=None,
@@ -61,10 +60,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--export-warc", metavar="DIR", default=None,
                    help="re-export the INPUT pages as WARC archives to DIR "
                         "(one member-gzip file per partition + stdout manifest count)")
-    p.add_argument("--compact", type=int, metavar="N", default=None,
-                   help="after the run, compact the output to N files per "
-                        "bucket directory (staged rewrite + swap; control table "
-                        "stays valid)")
     p.add_argument("--corpus-out", metavar="DIR", default=None,
                    help="also build the deduplicated training corpus (quality "
                         "filter + exact text dedup) from the extraction output to DIR")
@@ -165,7 +160,6 @@ def main(argv: list[str] | None = None) -> int:
             args.output,
             args.control,
             n_buckets=args.n_buckets,
-            salt_factor=args.salt_factor,
             verify_readback=args.verify_readback,
         )
     except BucketingMismatchError as exc:
@@ -191,16 +185,6 @@ def main(argv: list[str] | None = None) -> int:
         print(
             "exported %d WARC files / %d records to %s"
             % (manifest.files, manifest.records or 0, args.export_warc),
-            file=sys.stderr,
-        )
-
-    if args.compact:
-        from pdf_extractor_spark.pipeline import compact_output
-
-        cmp_stats = compact_output(spark, args.output, files_per_bucket=args.compact)
-        print(
-            "compacted %s: %d files -> %d (%d rows)"
-            % (args.output, cmp_stats.files_before, cmp_stats.files_after, cmp_stats.rows),
             file=sys.stderr,
         )
 

@@ -1,5 +1,5 @@
 """End-to-end extraction job: scan → resume anti-join → Arrow kernel →
-salted repartition → partitioned write → control-table commit.
+write rebalance → partitioned write → control-table commit.
 
 The Spark-first restatement of the reference's main loop (reference:
 cli.py:105-119 — sequential per-document processing with a per-doc resume
@@ -9,24 +9,27 @@ check) as one declarative plan:
       |> withColumn(partition_id = pmod(xxhash64(url), n_buckets))
       |> LEFT ANTI JOIN broadcast(committed partitions)          # resume, J3
       |> mapInPandas(extract_kernel)                             # D1/D2
-      |> repartition(shuffle_n, partition_id, salt)              # skew: salt
+      |> hint("rebalance", partition_id)                         # AQE sizes it
       |> write partitionBy(partition_id), dynamic overwrite      # S6
       ;  control <- per-partition metrics appended after success # T1/T2
 
 Stage order is deliberate: the kernel runs on SCAN SPLITS (uniform bytes per
 task by construction — spark.sql.files.maxPartitionBytes), and the one
-explicit shuffle moves the kernel's OUTPUT, which is ~3× smaller than the
-raw html it replaces. Shuffling the input instead (kernel on the reduce
+shuffle moves the kernel's OUTPUT, which is ~3× smaller than the raw html it
+replaces. Shuffling the input instead (kernel on the reduce
 side) was measured 2× slower at equal cores: the full payload pays
 serialize/compress/deserialize, and hot-host skew would land on the compute
 stage rather than the cheap write stage.
 
 Scale notes (100 TB / 1000 executors):
-  - the anti-join build side is ≤ n_buckets rows → broadcast: no shuffle of
-    the big side beyond the one explicit output repartition;
-  - salt spreads heavy hosts (zipf head) across `salt_factor` write tasks so
-    no reducer owns a hot url-hash bucket; AQE skew handling stays on as
-    backstop;
+  - the anti-join build side is ≤ n_buckets rows, collected once on the
+    driver → broadcast: no shuffle of the big side beyond the one output
+    rebalance;
+  - the rebalance lets AQE size the write by measured shuffle bytes: small
+    buckets coalesce into shared tasks (one file per bucket directory), and
+    a bucket above `spark.sql.adaptive.advisoryPartitionSizeInBytes` — a
+    heavy host (zipf head) or one url recrawled 10^6 times — is split into
+    map-output ranges of about that size, so no reducer owns a hot bucket;
   - the kernel stage reads only (url, html) — column pruning keeps the scan
     narrow (the `text` column, ~50% of table bytes, is never read);
   - dynamic partition overwrite makes reruns idempotent per partition.
@@ -46,7 +49,6 @@ from pdf_extractor_spark.kernel.extract import FAILURE_STATUSES
 from pdf_extractor_spark.kernel.spark_kernel import extract_batches, EXTRACTED_SCHEMA
 
 DEFAULT_N_BUCKETS = 64
-DEFAULT_SALT_FACTOR = 8
 
 _MetricsRow = namedtuple(
     "_MetricsRow",
@@ -99,8 +101,6 @@ def run_extraction(
     out_dir: str,
     control_dir: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt_factor: int = DEFAULT_SALT_FACTOR,
-    shuffle_partitions: int | None = None,
     verify_readback: bool = False,
 ) -> RunStats:
     """Run (or resume) the extraction job. Returns lineage totals for this run.
@@ -121,7 +121,6 @@ def run_extraction(
     # control table still lists them, silently losing their documents on
     # resume. Enforce it here rather than trusting the caller's session.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    shuffle_n = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     pages_b = with_partition_id(pages, n_buckets)
 
@@ -130,12 +129,9 @@ def run_extraction(
     committed = ctl.committed_partitions(spark, control_dir, n_buckets=n_buckets)
     # committed ids are also needed driver-side (≤ n_buckets rows): to skip
     # the job entirely when everything is committed, and to prune the
-    # metrics read-back after the write. Ids outside [0, n_buckets) can only
-    # come from a pre-stamp control dir — drop them so the fully-committed
-    # check and the metrics pruning stay keyed to the CURRENT bucketing.
-    committed_ids = {
-        r.partition_id for r in committed.collect() if 0 <= r.partition_id < n_buckets
-    }
+    # metrics read-back after the write. `committed` is a local relation,
+    # so this collect launches no Spark job.
+    committed_ids = {r.partition_id for r in committed.collect()}
     if len(committed_ids) >= n_buckets:
         # fully-committed resume: return WITHOUT building the plan — the
         # anti-join would still scan the whole input to write nothing
@@ -156,27 +152,15 @@ def run_extraction(
         )
     )
 
-    # Salted spread of the WRITE: partition_id alone would map each url-hash
-    # bucket to one reducer; a hot host (zipf head) would serialize it.
-    # salt = (url-hash + map-side partition id) mod k fans each bucket
-    # across k write tasks; the partitioned write regroups by directory, so
-    # co-location is preserved on disk, not in the shuffle. The
-    # spark_partition_id term (evaluated map-side = the kernel task's scan
-    # split, deterministic under retry) additionally spreads IDENTICAL
-    # urls — a url recrawled 10^6 times hashes to one salt value under a
-    # url-only salt, but its copies span many scan splits, so they fan out
-    # here. Only the kernel output (≈3× smaller than the raw html) crosses
-    # this shuffle.
-    salted = extracted.repartition(
-        shuffle_n,
-        "partition_id",
-        F.pmod(F.xxhash64("url") + F.spark_partition_id(), F.lit(salt_factor)).alias(
-            "salt"
-        ),
-    )
-
+    # Rebalance of the WRITE: only the kernel output (≈3× smaller than the
+    # raw html) crosses this shuffle. With no fixed partition count, AQE
+    # coalesces small url-hash buckets into shared write tasks — one file
+    # per bucket directory — and splits a bucket whose map output
+    # exceeds the advisory partition size into map-output ranges, so a hot
+    # url or host still fans out over several write tasks.
     (
-        salted.write.mode("overwrite")
+        extracted.hint("rebalance", "partition_id")
+        .write.mode("overwrite")
         .partitionBy("partition_id")
         # snappy, not zstd: the write shares cores with the Python kernel
         # workers; cheap compression keeps the JVM off the critical path
@@ -245,68 +229,6 @@ def run_extraction(
         sum(r.parse_failures or 0 for r in metrics_rows),
         sum(r.font_unmapped or 0 for r in metrics_rows),
     )
-
-
-@dataclass
-class CompactStats:
-    rows: int
-    files_before: int
-    files_after: int
-
-
-def compact_output(
-    spark: SparkSession,
-    out_dir: str,
-    files_per_bucket: int = 1,
-    shuffle_partitions: int | None = None,
-) -> CompactStats:
-    """Small-file compaction for the partitioned extraction output.
-
-    Every write pass adds `salt_factor × waves` files per bucket directory;
-    at 10^12 docs the file count (not the byte count) becomes the metadata
-    bottleneck for every downstream scan. This rewrites each url-hash
-    bucket with exactly `files_per_bucket` files: one shuffle keyed on
-    (partition_id, url-salt mod files_per_bucket) puts each bucket's rows
-    in `files_per_bucket` tasks, and the partitionBy write regroups them
-    per directory. (On an Iceberg deployment this is `rewrite_data_files`;
-    the parquet-dir form stages and swaps because Spark cannot safely
-    overwrite its own input.)
-
-    The swap is rename-based: original → `.pre_compact`, staging → final,
-    then delete — a crash mid-swap leaves either the original or the
-    compacted dir intact under a recoverable name, never a half-deleted
-    table. Content is unchanged, so the control table stays valid and a
-    resumed run still skips every committed partition.
-    """
-    import os
-    import shutil
-
-    df = spark.read.parquet(out_dir)
-    files_before = df.select(F.input_file_name()).distinct().count()
-    shuffle_n = shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    staging = out_dir.rstrip("/") + "._compact_staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        df.repartition(
-            shuffle_n,
-            "partition_id",
-            F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)).alias("_csalt"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .option("compression", "snappy")
-        .parquet(staging)
-    )
-    old = out_dir.rstrip("/") + ".pre_compact"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(out_dir, old)
-    os.replace(staging, out_dir)
-    shutil.rmtree(old)
-    out = spark.read.parquet(out_dir)
-    files_after = out.select(F.input_file_name()).distinct().count()
-    return CompactStats(out.count(), files_before, files_after)
 
 
 @dataclass

@@ -2,7 +2,7 @@
 
 Each assertion pins a scale property from SURVEY.md §4.2 / the pipeline
 docstring: column pruning into the scan, predicate pushdown, broadcast of
-dim sides, no shuffle before the extraction kernel, and the salted shuffle
+dim sides, no shuffle before the extraction kernel, and the write rebalance
 placed AFTER it.
 """
 
@@ -42,16 +42,25 @@ def test_kernel_scan_is_pruned(spark, tmp_path):
 
 def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     """pipeline.py stage order: no Exchange below the Arrow kernel — the
-    only shuffle moves the kernel OUTPUT to the salted write."""
+    only shuffle is the write rebalance of the kernel OUTPUT."""
     from pdf_extractor_spark import control as ctl
-    from pdf_extractor_spark.pipeline import with_partition_id, _make_kernel_with_pid
+    from pdf_extractor_spark.pipeline import (
+        _MetricsRow,
+        _make_kernel_with_pid,
+        with_partition_id,
+    )
     from pdf_extractor_spark.kernel.spark_kernel import EXTRACTED_SCHEMA
     from pdf_extractor_spark.synth import pages_df
 
     path = str(tmp_path / "pages")
     pages_df(spark, 50, num_partitions=1).write.parquet(path)
     pages_b = with_partition_id(spark.read.parquet(path), 16)
-    committed = ctl.committed_partitions(spark, str(tmp_path / "none"))
+    # a resume: with nothing committed the optimizer drops the anti-join
+    ctl_dir = str(tmp_path / "ctl")
+    ctl.append_commits_rows(
+        [_MetricsRow(0, 1, 1, 0, 0), _MetricsRow(3, 1, 1, 0, 0)], ctl_dir, n_buckets=16
+    )
+    committed = ctl.committed_partitions(spark, ctl_dir, n_buckets=16)
     todo = pages_b.join(F.broadcast(committed), "partition_id", "left_anti")
     extracted = todo.select("partition_id", "url", "html").mapInPandas(
         _make_kernel_with_pid(None), schema="partition_id int, " + EXTRACTED_SCHEMA
@@ -60,16 +69,15 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     # resume anti-join is a broadcast join, never a shuffled one
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     # the PAGES side below the kernel (everything before the broadcast build
-    # subtree) must have no shuffle exchange; the control-table distinct
-    # inside BroadcastExchange shuffles ≤ n_buckets rows and is fine
+    # subtree) must have no shuffle exchange
     pages_side = plan[plan.index("MapInPandas"): plan.index("BroadcastExchange")]
     assert "Exchange hashpartitioning" not in pages_side
     assert "FileScan parquet" in pages_side  # kernel feeds straight off the scan
-    # the salted repartition sits ABOVE the kernel
-    salted = extracted.repartition(
-        4, "partition_id", F.pmod(F.xxhash64("url"), F.lit(8)).alias("salt")
-    )
-    plan2 = _plan(salted)
+    # the write rebalance on partition_id sits ABOVE the kernel
+    plan2 = _plan(extracted.hint("rebalance", "partition_id"))
+    exchange = next(l for l in plan2.splitlines() if "Exchange" in l)
+    assert "REBALANCE_PARTITIONS_BY_COL" in exchange
+    assert "hashpartitioning(partition_id" in exchange
     assert plan2.index("Exchange") < plan2.index("MapInPandas")
 
 
