@@ -31,6 +31,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.registry import load, register
+from pdf_extractor_spark.operators.textstats import _QUALITY_SQL, _quality
 
 # --- benchmark decontamination --------------------------------------------
 
@@ -694,7 +695,6 @@ _TOKEN_BUDGET = 12_000
 _QB_MAX = 63  # quality quantized to 64 levels: bucket = clamp(floor(q*4), 0, 63)
 
 _WS = r"[ \t\n\r\f\x0B]+"
-_STOP_PAT = r"\b(data|table|row|value|query)\b"
 
 
 def select_token_budget(scored, budget: int = _TOKEN_BUDGET, id_col: str = "doc_id"):
@@ -759,12 +759,7 @@ def select_token_budget(scored, budget: int = _TOKEN_BUDGET, id_col: str = "doc_
     WITH t AS (
       SELECT doc_id,
              len(regexp_split_to_array(trim(text), '{_WS}')) AS tokens,
-             round(
-               ln(1 + length(text))
-               * (1 - len(regexp_extract_all(text, '{_STOP_PAT}'))
-                      / CAST(len(regexp_split_to_array(trim(text), '{_WS}'))
-                             AS DOUBLE)),
-               4) AS quality
+             round({_QUALITY_SQL}, 4) AS quality
       FROM documents
       WHERE length(trim(text)) > 0
     )
@@ -789,12 +784,11 @@ def select_token_budget(scored, budget: int = _TOKEN_BUDGET, id_col: str = "doc_
 )
 def token_budget_select(spark, sf_dir):
     d = load(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    words = F.size(F.split(F.trim("text"), _WS))
-    stop_hits = F.regexp_count("text", F.lit(_STOP_PAT))
-    quality = F.round(
-        F.log(1 + F.length("text")) * (1 - stop_hits / words.cast("double")), 4
+    scored = d.select(
+        "doc_id",
+        F.size(F.split(F.trim("text"), _WS)).alias("tokens"),
+        F.round(_quality(), 4).alias("quality"),
     )
-    scored = d.select("doc_id", words.alias("tokens"), quality.alias("quality"))
     return select_token_budget(scored).orderBy("doc_id")
 
 
@@ -1884,13 +1878,6 @@ def chunk_overlap(spark, sf_dir):
     ).orderBy("doc_id", "chunk_idx")
 
 
-_QBR_QUALITY_SQL = (
-    "ln(1 + length(d.text)) * (1 - len(regexp_extract_all(d.text, "
-    "'\\b(data|table|row|value|query)\\b')) / CAST(len(regexp_split_to_array("
-    "trim(d.text), '[ \\t\\n\\r\\f\\x0B]+')) AS DOUBLE))"
-)
-
-
 @register(
     "quality_by_rank",
     oracle=f"""
@@ -1903,7 +1890,7 @@ _QBR_QUALITY_SQL = (
       FROM r{_PR_ROUNDS} r CROSS JOIN n
     ),
     q AS (
-      SELECT d.source AS host, {_QBR_QUALITY_SQL} AS q
+      SELECT d.source AS host, {_QUALITY_SQL} AS q
       FROM documents d WHERE length(trim(d.text)) > 0
     )
     SELECT t.tier,
@@ -1941,14 +1928,7 @@ def quality_by_rank(spark, sf_dir):
         )
     )
     d = load(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    words = F.size(F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+"))
-    stop_hits = F.regexp_count("text", F.lit(r"\b(data|table|row|value|query)\b"))
-    q = d.select(
-        F.col("source").alias("host"),
-        (
-            F.log(1 + F.length("text")) * (1 - stop_hits / words.cast("double"))
-        ).alias("q"),
-    )
+    q = d.select(F.col("source").alias("host"), _quality().alias("q"))
     return (
         tier.join(q, "host", "left")
         .groupBy("tier")
@@ -2026,13 +2006,7 @@ def host_components(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     hosts = d.select(F.col("source").alias("host")).distinct()
     max_id = d.agg(F.max("doc_id")).collect()[0][0]
-    e = _host_edges(d, hosts, max_id)
-    sym = (
-        e.selectExpr("src AS a", "dst AS b")
-        .unionAll(e.selectExpr("dst AS a", "src AS b"))
-        .cache()
-    )
-    pinned, _rounds = min_label_components(sym)
+    pinned, _rounds = min_label_components(_host_edges(d, hosts, max_id))
     result = (
         pinned.select("node", "root")
         .groupBy("root")
@@ -2040,6 +2014,5 @@ def host_components(spark, sf_dir):
         .select(F.col("root").alias("component"), "n_hosts")
     )
     out = result.localCheckpoint(eager=True)
-    sym.unpersist()
     pinned.unpersist()
     return out.orderBy("component")

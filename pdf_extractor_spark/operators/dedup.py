@@ -11,6 +11,13 @@ size, which is the entire point of LSH at 10^12 docs (shingle self-join is
 quadratic per hub shingle and is provided for oracle-comparable Jaccard at
 small scale).
 
+Every MinHash-LSH consumer builds its band table with minhash_band_table
+and joins it through one of two helpers: band_pairs (distinct candidate id
+pairs, within one table or across two) and band_hits (distinct ids of one
+table that collide with another, a left-semi probe). Their DuckDB twins are
+_band_cte_sql (the band chain) and _band_pairs_sql (the pair join), so a
+change to the band join — e.g. a hot-key cap — is made in one place.
+
 Hash portability: md5 hex strings compare lexicographically the same in
 Spark and DuckDB, so min(md5(...)) is a valid portable MinHash; bit tricks
 use hex-digit arithmetic (strpos on '0123456789abcdef') instead of
@@ -22,12 +29,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.registry import load, register
-
-_NORM_SQL = "trim(regexp_replace(lower(text), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'))"
-
-
-def _norm(col):
-    return F.trim(F.regexp_replace(F.lower(col), r"[ \t\n\r\f\x0B]+", " "))
+from pdf_extractor_spark.operators.textstats import (
+    _NORM_SQL,
+    _QUALITY_SQL,
+    _norm,
+    _quality,
+)
 
 
 # --- exact ---------------------------------------------------------------
@@ -68,9 +75,11 @@ def dedup_exact(spark, sf_dir):
 # --- shingles (shared by jaccard + minhash) --------------------------------
 
 # char 8-grams at stride 4 over normalized text — deterministic, portable.
-_SHINGLE_SQL = f"""
+def _shingle_sql(pred: str) -> str:
+    """DuckDB twin of shingle_frame over documents WHERE `pred`."""
+    return f"""
   SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 8) AS s
-  FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents WHERE doc_id < 300),
+  FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents WHERE {pred}),
        unnest(range(1, greatest(length(t) - 6, 2), 4)) AS u(i)
   WHERE length(t) >= 8
 """
@@ -115,8 +124,8 @@ def _shingles(spark, sf_dir):
 def minhash_band_table(docs, id_col: str = "doc_id", text_col: str = "text"):
     """(id, band, band_key) MinHash-LSH band table over a document frame —
     the DEDUP STATE a crawl pipeline persists between snapshots (k=12
-    seed-salted md5 minhashes, 4 bands × 3 rows; identical construction to
-    dedup_minhash_lsh's inline form). Persist this table per snapshot and
+    seed-salted md5 minhashes, 4 bands × 3 rows; every MinHash op pairs it
+    through band_pairs / band_hits). Persist this table per snapshot and
     feed it to incremental_dedup_candidates so the next crawl never
     re-shingles committed documents — the T1/T2 control-table discipline
     applied to dedup state."""
@@ -143,10 +152,66 @@ def minhash_band_table(docs, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
+def band_pairs(left, right=None, id_col: str = "doc_id"):
+    """Distinct (da, db) id pairs whose band rows share a (band, band_key)
+    bucket: the LSH candidate join. `left` and `right` are
+    minhash_band_table frames; da comes from `left`, db from `right`. With
+    no `right`, `left` is paired with itself and only da < db is kept.
+    The join key is the bucket, never the document, so work stays bounded
+    by bucket collisions."""
+    a = left.select(F.col(id_col).alias("da"), "band", "band_key")
+    b = (left if right is None else right).select(
+        F.col(id_col).alias("db"), "band", "band_key"
+    )
+    pairs = a.join(b, ["band", "band_key"])
+    if right is None:
+        pairs = pairs.filter(F.col("da") < F.col("db"))
+    return pairs.select("da", "db").distinct()
+
+
+def band_hits(left, right, id_col: str = "doc_id"):
+    """Distinct `left` ids with any (band, band_key) in `right`: a
+    left-semi probe against a band table (persisted dedup state), so the
+    right side's own ids are never paired or read."""
+    return (
+        left.join(
+            right.select("band", "band_key"), ["band", "band_key"], "left_semi"
+        )
+        .select(id_col)
+        .distinct()
+    )
+
+
+def _band_cte_sql(name: str, pred: str) -> str:
+    """DuckDB CTE chain mirroring minhash_band_table over documents
+    WHERE `pred`: shingles as CTE `{name}_sh`, the band table as `name`."""
+    return f"""
+    {name}_sh AS ({_shingle_sql(pred)}),
+    {name}_sig AS (  -- MinHash: k=12 seed-salted md5s, min as hex string
+      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
+      FROM {name}_sh, unnest(range(0, 12)) AS kk(k)
+      GROUP BY doc_id, k
+    ),
+    {name} AS (  -- LSH: 4 bands × 3 rows; band key = md5 of joined sigs
+      SELECT doc_id, CAST(k // 3 AS INT) AS band,
+             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
+      FROM {name}_sig GROUP BY doc_id, band
+    )"""
+
+
+def _band_pairs_sql(a: str, b: str | None = None) -> str:
+    """DuckDB twin of band_pairs over band-table CTEs `a` and `b`."""
+    self_cond = " AND x.doc_id < y.doc_id" if b is None else ""
+    return f"""
+    SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
+    FROM {a} x JOIN {b or a} y
+      ON x.band = y.band AND x.band_key = y.band_key{self_cond}"""
+
+
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH sh AS ({_SHINGLE_SQL}),
+    WITH sh AS ({_shingle_sql("doc_id < 300")}),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
       SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
@@ -190,20 +255,8 @@ def dedup_ngram_jaccard(spark, sf_dir):
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH sh AS ({_SHINGLE_SQL}),
-    sig AS (  -- MinHash: k=12 independent hashes via seed-salted md5, min as hex-string
-      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
-      FROM sh, unnest(range(0, 12)) AS kk(k)
-      GROUP BY doc_id, k
-    ),
-    bands AS (  -- LSH: 4 bands × 3 rows; band key = md5 of concatenated sigs
-      SELECT doc_id, CAST(k // 3 AS INT) AS band,
-             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
-      FROM sig GROUP BY doc_id, band
-    )
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+    WITH {_band_cte_sql("bands", "doc_id < 300")}
+    {_band_pairs_sql("bands")}
     """,
     doc="MinHash + LSH candidate pairs (Broder '97 resemblance sketch; "
     "banding per Leskovec/Rajaraman/Ullman MMDS ch.3). The band equi-join "
@@ -212,20 +265,10 @@ def dedup_ngram_jaccard(spark, sf_dir):
     "as hex string is portable across engines (lexicographic = bytewise).",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    bands = minhash_band_table(
-        load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    return band_pairs(
+        minhash_band_table(
+            load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
         )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
     )
 
 
@@ -291,7 +334,8 @@ def dedup_simhash(spark, sf_dir):
 
 def min_label_components(edges, max_rounds: int = 1000, jump_from_round: int = 3):
     """Min-label propagation with ADAPTIVE POINTER JUMPING to fixpoint over
-    a symmetric (a, b) edge frame. Returns (labels_df(node, root), rounds).
+    an undirected two-column edge frame (one row per edge, either
+    direction). Returns (labels_df(node, root), rounds).
 
     Each round takes, per node, the min of: its own label, its neighbors'
     labels, and — from round `jump_from_round` on — its LABEL'S label (the
@@ -323,7 +367,17 @@ def min_label_components(edges, max_rounds: int = 1000, jump_from_round: int = 3
     same projection and checkpointed with the labels, so the probe is a
     limit(1) scan of in-memory blocks — one job per round for the
     update+checkpoint, one cheap probe, no extra join.
+
+    The edges are symmetrized and cached here and released before
+    returning: the final labels are an eager checkpoint, so nothing
+    downstream reads them.
     """
+    u, v = edges.columns
+    edges = (
+        edges.select(F.col(u).alias("a"), F.col(v).alias("b"))
+        .unionAll(edges.select(F.col(v).alias("a"), F.col(u).alias("b")))
+        .cache()
+    )
     labels = edges.select(F.col("a").alias("node")).distinct().withColumn(
         "root", F.col("node")
     ).cache()
@@ -362,11 +416,10 @@ def min_label_components(edges, max_rounds: int = 1000, jump_from_round: int = 3
         labels = new_labels.select("node", "root")
         if changed == 0:
             break
+    edges.unpersist()
     # callers unpersist the returned frame once downstream results are
     # materialized — it is the handle holding the final checkpoint blocks
     return pinned, rounds
-
-
 
 
 # The full candidate-pair → transitive-closure CTE chain, shared by the
@@ -374,22 +427,8 @@ def min_label_components(edges, max_rounds: int = 1000, jump_from_round: int = 3
 # oracles. Ends with `comp` = (node, root) final labels; callers append
 # either the final SELECT or further CTEs after a comma.
 _COMPONENT_CTES = f"""
-    WITH sh AS ({_SHINGLE_SQL}),
-    sig AS (
-      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
-      FROM sh, unnest(range(0, 12)) AS kk(k)
-      GROUP BY doc_id, k
-    ),
-    bands AS (
-      SELECT doc_id, CAST(k // 3 AS INT) AS band,
-             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
-      FROM sig GROUP BY doc_id, band
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
+    WITH {_band_cte_sql("bands", "doc_id < 300")},
+    pairs AS ({_band_pairs_sql("bands")}),
     edges AS (
       SELECT da AS a, db AS b FROM pairs
       UNION ALL SELECT db, da FROM pairs
@@ -426,13 +465,7 @@ _COMPONENT_CTES = f"""
     "DuckDB oracle = recursive CTE transitive closure.",
 )
 def dedup_components(spark, sf_dir):
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = (
-        pairs.selectExpr("da AS a", "db AS b")
-        .unionAll(pairs.selectExpr("db AS a", "da AS b"))
-        .cache()
-    )
-    pinned, _rounds = min_label_components(edges)
+    pinned, _rounds = min_label_components(dedup_minhash_lsh(spark, sf_dir))
     labels = pinned.select("node", "root")
 
     result = labels.groupBy("root").agg(
@@ -445,23 +478,12 @@ def dedup_components(spark, sf_dir):
     # billions of rows, so a collect() here would be the scale-killer in an
     # otherwise shuffle-per-round plan. localCheckpoint(eager=True) cuts the
     # lineage at the aggregated result with one distributed job, after which
-    # every upstream pinned block (edges cache, per-round label checkpoints)
-    # can be released before returning. No action in this operator ever
-    # returns more than the 0/1 rows of the convergence probes to the driver.
+    # the final label checkpoint can be released before returning. No action
+    # in this operator ever returns more than the 0/1 rows of the
+    # convergence probes to the driver.
     out = result.localCheckpoint(eager=True)
-    edges.unpersist()
     pinned.unpersist()
     return out
-
-
-# Deterministic quality score shared with text_quality (textstats.py):
-# ln(1+len) * (1 - stopword_ratio), rounded to 4 places on both engines.
-_QUALITY_SQL = """
-      round(ln(1 + length(text))
-            * (1 - len(regexp_extract_all(text, '\\b(data|table|row|value|query)\\b'))
-                   / CAST(len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0B]+')) AS DOUBLE)),
-            4)
-"""
 
 
 @register(
@@ -469,7 +491,7 @@ _QUALITY_SQL = """
     oracle=_COMPONENT_CTES
     + f""",
     q AS (
-      SELECT doc_id, {_QUALITY_SQL} AS quality
+      SELECT doc_id, round({_QUALITY_SQL}, 4) AS quality
       FROM documents WHERE doc_id < 300
     ),
     ranked AS (
@@ -500,22 +522,13 @@ _QUALITY_SQL = """
 def dedup_keep_best(spark, sf_dir):
     from pyspark.sql import Window
 
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = (
-        pairs.selectExpr("da AS a", "db AS b")
-        .unionAll(pairs.selectExpr("db AS a", "da AS b"))
-        .cache()
-    )
-    pinned, _rounds = min_label_components(edges)
+    pinned, _rounds = min_label_components(dedup_minhash_lsh(spark, sf_dir))
     labels = pinned.select("node", "root")
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    words = F.size(F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+"))
-    stop_hits = F.regexp_count("text", F.lit(r"\b(data|table|row|value|query)\b"))
-    quality = F.round(
-        F.log(1 + F.length("text")) * (1 - stop_hits / words.cast("double")), 4
+    scored = docs.select(
+        F.col("doc_id").alias("node"), F.round(_quality(), 4).alias("quality")
     )
-    scored = docs.select(F.col("doc_id").alias("node"), quality.alias("quality"))
 
     part = Window.partitionBy("root")
     ranked = labels.join(scored, "node").select(
@@ -534,9 +547,8 @@ def dedup_keep_best(spark, sf_dir):
         F.col("quality").alias("keep_quality"),
     )
     # Same distributed-materialization discipline as dedup_components:
-    # checkpoint the bounded result, then release every upstream pin.
+    # checkpoint the bounded result, then release the label pin.
     out = result.localCheckpoint(eager=True)
-    edges.unpersist()
     pinned.unpersist()
     return out
 
@@ -828,45 +840,11 @@ def incremental_dedup_candidates(new_bands, old_bands, id_col: str = "doc_id"):
     Returns (da, db, kind): da a new-snapshot id; db the matched old id
     (kind='vs_old') or a later new id (kind='new').
     """
-    n = new_bands.select(F.col(id_col).alias("da"), "band", "band_key")
-    o = old_bands.select(F.col(id_col).alias("db"), "band", "band_key")
-    vs_old = (
-        n.join(o, ["band", "band_key"])
-        .select("da", "db")
-        .distinct()
-        .withColumn("kind", F.lit("vs_old"))
+    vs_old = band_pairs(new_bands, old_bands, id_col)
+    vs_new = band_pairs(new_bands, id_col=id_col)
+    return vs_old.withColumn("kind", F.lit("vs_old")).unionAll(
+        vs_new.withColumn("kind", F.lit("new"))
     )
-    b = new_bands.select(F.col(id_col).alias("db"), "band", "band_key")
-    vs_new = (
-        n.join(b, ["band", "band_key"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-        .distinct()
-        .withColumn("kind", F.lit("new"))
-    )
-    return vs_old.unionAll(vs_new)
-
-
-def _band_cte_sql(name: str, pred: str) -> str:
-    """DuckDB CTE chain mirroring minhash_band_table over documents
-    WHERE `pred` — exposes the final band table as CTE `name`."""
-    return f"""
-    {name}_sh AS (
-      SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 8) AS s
-      FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents WHERE {pred}),
-           unnest(range(1, greatest(length(t) - 6, 2), 4)) AS u(i)
-      WHERE length(t) >= 8
-    ),
-    {name}_sig AS (
-      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
-      FROM {name}_sh, unnest(range(0, 12)) AS kk(k)
-      GROUP BY doc_id, k
-    ),
-    {name} AS (
-      SELECT doc_id, CAST(k // 3 AS INT) AS band,
-             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
-      FROM {name}_sig GROUP BY doc_id, band
-    )"""
 
 
 @register(
@@ -874,13 +852,9 @@ def _band_cte_sql(name: str, pred: str) -> str:
     oracle=f"""
     WITH {_band_cte_sql("oldb", "doc_id < 300")},
     {_band_cte_sql("newb", "doc_id >= 300")}
-    SELECT DISTINCT n.doc_id AS da, o.doc_id AS db, 'vs_old' AS kind
-    FROM newb n JOIN oldb o
-      ON n.band = o.band AND n.band_key = o.band_key
+    SELECT da, db, 'vs_old' AS kind FROM ({_band_pairs_sql("newb", "oldb")})
     UNION ALL
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db, 'new' AS kind
-    FROM newb a JOIN newb b
-      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+    SELECT da, db, 'new' AS kind FROM ({_band_pairs_sql("newb")})
     """,
     doc="Incremental dedup vs a prior snapshot (round-4 verdict #7): the "
     "documents table split at doc_id 300 into an OLD snapshot (whose "
@@ -903,12 +877,11 @@ def dedup_incremental(spark, sf_dir):
     oracle=f"""
     WITH {_band_cte_sql("benchb", "doc_id % 10 = 0")},
     {_band_cte_sql("corpb", "doc_id % 10 <> 0")}
-    SELECT c.doc_id,
-           CAST(count(DISTINCT b.doc_id) AS BIGINT) AS n_bench_hits,
-           CAST(min(b.doc_id) AS BIGINT) AS first_bench
-    FROM corpb c JOIN benchb b
-      ON c.band = b.band AND c.band_key = b.band_key
-    GROUP BY c.doc_id ORDER BY c.doc_id
+    SELECT da AS doc_id,
+           CAST(count(*) AS BIGINT) AS n_bench_hits,
+           CAST(min(db) AS BIGINT) AS first_bench
+    FROM ({_band_pairs_sql("corpb", "benchb")})
+    GROUP BY da ORDER BY doc_id
     """,
     doc="FUZZY benchmark decontamination: the exact path (decontam_ngrams) "
     "misses paraphrased/reformatted leakage; this flags corpus docs whose "
@@ -923,16 +896,14 @@ def dedup_incremental(spark, sf_dir):
 )
 def decontam_fuzzy(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    bench = minhash_band_table(d.filter(F.col("doc_id") % 10 == 0)).select(
-        F.col("doc_id").alias("bench_id"), "band", "band_key"
-    )
+    bench = minhash_band_table(d.filter(F.col("doc_id") % 10 == 0))
     corpus = minhash_band_table(d.filter(F.col("doc_id") % 10 != 0))
     return (
-        corpus.join(F.broadcast(bench), ["band", "band_key"])
-        .groupBy("doc_id")
+        band_pairs(corpus, F.broadcast(bench))
+        .groupBy(F.col("da").alias("doc_id"))
         .agg(
-            F.countDistinct("bench_id").cast("long").alias("n_bench_hits"),
-            F.min("bench_id").cast("long").alias("first_bench"),
+            F.count("*").cast("long").alias("n_bench_hits"),
+            F.min("db").cast("long").alias("first_bench"),
         )
         .orderBy("doc_id")
     )
@@ -1077,15 +1048,14 @@ _SPLIT_DUCK = (
              CASE WHEN {_SPLIT_DUCK} < {_SPLIT_VAL_LIM}
                   THEN 'val' ELSE 'train' END AS split
       FROM documents
-    )
-    SELECT v.doc_id AS val_doc,
-           CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_train_hits,
-           CAST(min(t.doc_id) AS BIGINT) AS first_train
-    FROM bb v
-    JOIN sp sv ON sv.doc_id = v.doc_id AND sv.split = 'val'
-    JOIN bb t ON v.band = t.band AND v.band_key = t.band_key
-    JOIN sp st ON st.doc_id = t.doc_id AND st.split = 'train'
-    GROUP BY v.doc_id ORDER BY val_doc
+    ),
+    vb AS (SELECT bb.* FROM bb JOIN sp USING (doc_id) WHERE split = 'val'),
+    tb AS (SELECT bb.* FROM bb JOIN sp USING (doc_id) WHERE split = 'train')
+    SELECT da AS val_doc,
+           CAST(count(*) AS BIGINT) AS n_train_hits,
+           CAST(min(db) AS BIGINT) AS first_train
+    FROM ({_band_pairs_sql("vb", "tb")})
+    GROUP BY da ORDER BY val_doc
     """,
     doc="Train/val split leakage audit: documents are split HOST-disjoint "
     "(md5 bucket of the source site — every doc of a site lands on one "
@@ -1105,18 +1075,14 @@ def split_leakage(spark, sf_dir):
     ).otherwise(F.lit("train"))
     sp = d.select("doc_id", split.alias("split"))
     bands = minhash_band_table(d)
-    v = bands.join(sp.filter(F.col("split") == "val"), "doc_id").select(
-        F.col("doc_id").alias("val_doc"), "band", "band_key"
-    )
-    t = bands.join(sp.filter(F.col("split") == "train"), "doc_id").select(
-        F.col("doc_id").alias("train_doc"), "band", "band_key"
-    )
+    v = bands.join(sp.filter(F.col("split") == "val"), "doc_id")
+    t = bands.join(sp.filter(F.col("split") == "train"), "doc_id")
     return (
-        v.join(t, ["band", "band_key"])
-        .groupBy("val_doc")
+        band_pairs(v, t)
+        .groupBy(F.col("da").alias("val_doc"))
         .agg(
-            F.countDistinct("train_doc").cast("long").alias("n_train_hits"),
-            F.min("train_doc").cast("long").alias("first_train"),
+            F.count("*").cast("long").alias("n_train_hits"),
+            F.min("db").cast("long").alias("first_train"),
         )
         .orderBy("val_doc")
     )
@@ -1165,17 +1131,13 @@ def band_skew_stats(spark, sf_dir):
     "cross_source_dup",
     oracle=f"""
     WITH {_band_cte_sql("b", "TRUE")},
-    sb AS (
-      SELECT b.doc_id, b.band, b.band_key, d.source
-      FROM b JOIN documents d ON d.doc_id = b.doc_id
-    ),
     pairs AS (
-      SELECT DISTINCT least(a.source, c.source) AS src_a,
-             greatest(a.source, c.source) AS src_b,
-             a.doc_id AS da, c.doc_id AS db
-      FROM sb a JOIN sb c
-        ON a.band = c.band AND a.band_key = c.band_key
-       AND a.doc_id < c.doc_id AND a.source <> c.source
+      SELECT least(sa.source, sb.source) AS src_a,
+             greatest(sa.source, sb.source) AS src_b
+      FROM ({_band_pairs_sql("b")}) p
+      JOIN documents sa ON sa.doc_id = p.da
+      JOIN documents sb ON sb.doc_id = p.db
+      WHERE sa.source <> sb.source
     )
     SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS dup_pairs
     FROM pairs GROUP BY src_a, src_b ORDER BY src_a, src_b
@@ -1192,6 +1154,7 @@ def band_skew_stats(spark, sf_dir):
 )
 def cross_source_dup(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
+    # not band_pairs: that drops `source`, and its bare band table broadcasts
     bands = minhash_band_table(d).join(d.select("doc_id", "source"), "doc_id")
     a = bands.select(
         F.col("doc_id").alias("da"), "band", "band_key",
@@ -1277,18 +1240,13 @@ def dup_cluster_sizes(spark, sf_dir):
     "near_dup_precision",
     oracle=f"""
     WITH {_band_cte_sql("bb", "doc_id < 300")},
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS da, c.doc_id AS db
-      FROM bb a JOIN bb c
-        ON a.band = c.band AND a.band_key = c.band_key AND a.doc_id < c.doc_id
-    ),
-    sh AS ({_SHINGLE_SQL}),
-    sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
+    pairs AS ({_band_pairs_sql("bb")}),
+    sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM bb_sh GROUP BY doc_id),
     inter AS (
       SELECT p.da, p.db, CAST(count(*) AS BIGINT) AS i
       FROM pairs p
-      JOIN sh x ON x.doc_id = p.da
-      JOIN sh y ON y.doc_id = p.db AND y.s = x.s
+      JOIN bb_sh x ON x.doc_id = p.da
+      JOIN bb_sh y ON y.doc_id = p.db AND y.s = x.s
       GROUP BY p.da, p.db
     )
     SELECT p.da, p.db,

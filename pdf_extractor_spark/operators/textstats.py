@@ -21,6 +21,22 @@ def _norm(col):
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'))"
 
+
+# Deterministic quality score ln(1+len) * (1 - stopword_ratio), shared by
+# text_quality, quality_signals_wide, dedup_keep_best, token_budget_select
+# and quality_by_rank. Unrounded: callers round where their output does.
+def _quality():
+    words = F.size(F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+"))
+    stop_hits = F.regexp_count("text", F.lit(r"\b(data|table|row|value|query)\b"))
+    return F.log(1 + F.length("text")) * (1 - stop_hits / words.cast("double"))
+
+
+_QUALITY_SQL = """
+      ln(1 + length(text))
+      * (1 - len(regexp_extract_all(text, '\\b(data|table|row|value|query)\\b'))
+             / CAST(len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0B]+')) AS DOUBLE))
+"""
+
 # BPE-ish token classes: letter runs, digit runs, single punctuation marks.
 _TOKEN_PAT = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
@@ -51,16 +67,12 @@ def text_token_count(spark, sf_dir):
 
 @register(
     "text_quality",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            length(text) AS chars,
            len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0B]+')) AS words,
            len(regexp_extract_all(text, '\\b(data|table|row|value|query)\\b')) AS stop_hits,
-           round(
-             ln(1 + length(text))
-             * (1 - len(regexp_extract_all(text, '\\b(data|table|row|value|query)\\b'))
-                    / CAST(len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0B]+')) AS DOUBLE)),
-             4) AS quality
+           round({_QUALITY_SQL}, 4) AS quality
     FROM documents
     WHERE doc_id < 200 AND length(trim(text)) > 0
     """,
@@ -73,18 +85,14 @@ def text_quality(spark, sf_dir):
         load(spark, sf_dir, "documents")
         .filter((F.col("doc_id") < 200) & (F.length(F.trim("text")) > 0))
     )
-    stop_pat = r"\b(data|table|row|value|query)\b"
-    words = F.size(F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+"))
-    stop_hits = F.regexp_count("text", F.lit(stop_pat))
-    quality = F.round(
-        F.log(1 + F.length("text")) * (1 - stop_hits / words.cast("double")), 4
-    )
     return d.select(
         "doc_id",
         F.length("text").alias("chars"),
-        words.alias("words"),
-        stop_hits.alias("stop_hits"),
-        quality.alias("quality"),
+        F.size(F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+")).alias("words"),
+        F.regexp_count("text", F.lit(r"\b(data|table|row|value|query)\b")).alias(
+            "stop_hits"
+        ),
+        F.round(_quality(), 4).alias("quality"),
     )
 
 
@@ -855,7 +863,7 @@ def quality_signals_wide(spark, sf_dir):
         F.round(stop_hits / wd, 4).alias("stop_ratio"),
         F.round(digits / chars.cast("double"), 4).alias("digit_ratio"),
         F.round(nospace / wd, 4).alias("mean_word_len"),
-        F.round(F.log(1 + chars) * (1 - stop_hits / wd), 4).alias("quality"),
+        F.round(_quality(), 4).alias("quality"),
     )
 
 

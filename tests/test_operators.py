@@ -8,10 +8,6 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tools.check_oracle import canon_cell, value_hash  # noqa: E402
 
 from pdf_extractor_spark.operators.registry import TABLES, all_ops  # noqa: E402
@@ -76,6 +72,14 @@ SUBSET = [
     "quality_signals_wide",
     "domain_mix_report",
     "text_bigram_nll",
+    # band-join and component family
+    "dedup_incremental",
+    "split_leakage",
+    "cross_source_dup",
+    "near_dup_precision",
+    "dup_cluster_sizes",
+    "band_skew_stats",
+    "host_components",
 ]
 
 
